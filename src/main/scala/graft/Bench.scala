@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 
 /** Headline benchmark: q1..q22 on SPARK_GRAFT_SF_DIR, one JSON line out.
@@ -12,7 +11,7 @@ import org.apache.spark.sql.catalyst.InternalRow
   * plan (cloned per sample so every stage genuinely re-runs; consumed by
   * a drain-all job, the same full materialization the noop sink performs,
   * no driver-side collect).
-  * Round-9 attribution (BenchProbe under interleaving) showed the
+  * Round-9 attribution (a plan/exec split under interleaving) showed the
   * iteration-major protocol's ~2× rise vs query-major was per-sample
   * driver re-planning, not executor work — prepared-plan reuse removes
   * it without giving up iteration-major sampling. A full untimed warmup
@@ -20,6 +19,20 @@ import org.apache.spark.sql.catalyst.InternalRow
   * release-build numbers do.
   */
 object Bench {
+  /** The headline bench's session and cached-table partition count for
+    * `env`: parts/shuffle derive from `SPARK_GRAFT_CPUS` (default 32,
+    * [[GraftSession.protocolParts]]) unless `SPARK_GRAFT_BENCH_PARTS` /
+    * `SPARK_GRAFT_BENCH_SHUFFLE` pin them; AQE off unless
+    * `SPARK_GRAFT_AQE=true` (its stage re-optimization costs more than it
+    * saves on sub-second queries); 64MB broadcast threshold. */
+  def settings(env: Map[String, String]): (GraftSession.Local, Int) = {
+    import GraftSession._
+    val n = cpus(env, 32)
+    (Local(n, envInt(env, "SPARK_GRAFT_BENCH_SHUFFLE", protocolShuffle(n)),
+      envBool(env, "SPARK_GRAFT_AQE", false), Some("64MB")),
+      envInt(env, "SPARK_GRAFT_BENCH_PARTS", protocolParts(n)))
+  }
+
   /** 1/5/15-minute system load average as a JSON array ("[0.39,0.14,0.30]").
     * Recorded before and after the timed region so a reader can
     * mechanically distinguish ambient-load drift from plan regressions
@@ -36,55 +49,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val loadBefore = loadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Env knobs parse loudly: a malformed value falls back to the default
-    // with a stderr line naming the variable, instead of crashing the
-    // whole run before any timing is emitted (r18 ADVICE item 3).
-    def envInt(name: String, default: Int): Int =
-      sys.env.get(name).map { v =>
-        try v.trim.toInt catch { case _: NumberFormatException =>
-          System.err.println(s"[bench] $name='$v' is not an int; using $default")
-          default }
-      }.getOrElse(default)
-    def envDouble(name: String, default: Double): Double =
-      sys.env.get(name).map { v =>
-        try v.trim.toDouble catch { case _: NumberFormatException =>
-          System.err.println(s"[bench] $name='$v' is not a number; using $default")
-          default }
-      }.getOrElse(default)
-    // Scaling-honest defaults (r19 verdict item 2): when the env doesn't
-    // pin them, parts/shuffle derive from SPARK_GRAFT_CPUS so a lower-core
-    // run genuinely exposes less parallelism — the former fixed 8/4
-    // capped every query at 8 tasks regardless of core count, which made
-    // the driver's 8-vs-32-core scaling ratios read ≈1 by construction.
-    // Derivation measured this round (r20 alternating clean legs at 32
-    // cores, sf0.1): parts = cpus, shuffle = cpus/4 (floors 8/4).
-    //   8/4 (old pin)  8.95 / 8.58 s   — but caps every stage at 8 tasks
-    //   32/16          11.14 / 10.55 s — post-shuffle task launch dominates
-    //   32/4           13.07 s         — 32 map tasks feeding 4 reducers
-    //   32/8           9.21 s          — scan parallelism follows cores,
-    //                                    q1 0.23→0.19; within noise of 8/4
-    // At cpus=8 the derivation reproduces the old 8/4 exactly, so the
-    // historical 8-core artifacts stay comparable. Explicit env overrides
-    // win, as before. At real scale the same knobs are sized to cores ×
-    // executors; AQE (off here — its stage re-optimization costs more
-    // than it saves on sub-second queries) would be on for a 100 TB run.
-    val cpusN = try cpus.trim.toInt catch { case _: NumberFormatException => 32 }
-    val parts = envInt("SPARK_GRAFT_BENCH_PARTS", math.max(8, cpusN))
-    val shuffle = envInt("SPARK_GRAFT_BENCH_SHUFFLE",
-      math.max(4, cpusN / 4)).toString
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "false")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (settings, parts) = Bench.settings(sys.env)
+    val spark = GraftSession.local(settings)
     // Setup (mirrors the reference's table registration): cache tables
     // in-memory, repartitioned so stages parallelize past the corpus's
     // single-row-group parquet layout. Not counted in query timings, same
@@ -193,8 +159,8 @@ object Bench {
     // CACHED protocol; the uncached lane's q1 includes parquet scans, so
     // its clean class is different — auto-disable there too (callers arm
     // it explicitly once the lane's clean class is established).
-    val canaryThresh: Double = envDouble("SPARK_GRAFT_CANARY_SEC",
-      if (sfDir.contains("sf0.1") && !uncached) 0.95 else 0.0)
+    val canaryThresh: Double = GraftSession.envOr(sys.env, "SPARK_GRAFT_CANARY_SEC",
+      if (sfDir.contains("sf0.1") && !uncached) 0.95 else 0.0)(_.toDouble)
     val canaryEnabled = canaryThresh > 0 && prepared.contains(canaryName)
     def canarySamples(): Seq[Double] =
       Seq.fill(3)(run(canaryName)).filter(_ >= 0)
@@ -210,8 +176,8 @@ object Bench {
     def canaryHot(s: Seq[Double]): Boolean =
       s.isEmpty || s.sorted.apply(s.size / 2) > canaryThresh ||
         s.count(_ > 0.85 * canaryThresh) >= 2
-    val canaryRetries = envInt("SPARK_GRAFT_CANARY_RETRIES", 2)
-    val backoffSec = envInt("SPARK_GRAFT_CANARY_BACKOFF_SEC", 30)
+    val canaryRetries = GraftSession.envInt(sys.env, "SPARK_GRAFT_CANARY_RETRIES", 2)
+    val backoffSec = GraftSession.envInt(sys.env, "SPARK_GRAFT_CANARY_BACKOFF_SEC", 30)
     val canaryAbort = sys.env.get("SPARK_GRAFT_CANARY_ABORT").contains("true")
     // Mid-suite canary state: each entry is the sample group taken at one
     // interleave point (1 clean sample, or 3 when the first ran hot and
@@ -260,7 +226,7 @@ object Bench {
     // runs (-1 sentinel) are dropped BEFORE the median so one failure
     // can't skew it; queries with zero successful runs are reported
     // explicitly instead of silently dropped.
-    val iters = envInt("SPARK_GRAFT_BENCH_ITERS", 5)
+    val iters = GraftSession.envInt(sys.env, "SPARK_GRAFT_BENCH_ITERS", 5)
     // SPARK_GRAFT_BENCH_ORDER=query runs each query's samples back-to-back
     // — consecutive executions per query, analogous to the reference
     // timing all of one query's statements together (tpch.py runs each
@@ -330,9 +296,11 @@ object Bench {
       if (!canaryEnabled) """{"enabled":false}"""
       else s"""{"enabled":true,"query":"$canaryName","threshold_sec":$canaryThresh,"pre_attempts":${preAttempts.map(jarr).mkString("[", ",", "]")},"mid":${midAttempts.map(jarr).mkString("[", ",", "]")},"mid_hot":$midHot,"post":${jarr(postSamples)}}"""
     // "uncached" is stamped only when the lane knob is on, so driver-run
-    // artifacts (env unset) keep the exact historical JSON shape.
+    // artifacts (env unset) keep their historical keys. The config is read
+    // back from the running session: the parallelism actually measured.
     val laneJson = if (uncached) ""","uncached":true""" else ""
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"spread":$spread,"failed":$failed,"aborted":$aborted,"load":$load,"poisoned":$poisoned,"canary":$canaryJson,"sf":"$sfDir"$laneJson}""")
+    val configJson = s""""cpus":${spark.sparkContext.defaultParallelism},"parts":$parts,"shuffle":${spark.conf.get("spark.sql.shuffle.partitions")},"aqe":${spark.conf.get("spark.sql.adaptive.enabled")},"lane":"${if (uncached) "parquet" else "cached"}""""
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"spread":$spread,"failed":$failed,"aborted":$aborted,"load":$load,"poisoned":$poisoned,"canary":$canaryJson,"sf":"$sfDir"$laneJson,$configJson}""")
     spark.stop()
   }
 }

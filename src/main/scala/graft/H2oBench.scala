@@ -104,23 +104,21 @@ object H2oBench {
           .groupBy("id4").agg(sum(col("v3") * col("w3")).as("s"))))
   }
 
+  /** Session and fact partition count for `env`: `SPARK_GRAFT_CPUS` cores,
+    * `SPARK_GRAFT_BENCH_SHUFFLE` / `SPARK_GRAFT_BENCH_PARTS` (32 each), AQE
+    * on unless `SPARK_GRAFT_AQE=false`, 64MB broadcast threshold. */
+  def settings(env: Map[String, String]): (GraftSession.Local, Int) = {
+    import GraftSession._
+    (Local(cpus(env, 32), envInt(env, "SPARK_GRAFT_BENCH_SHUFFLE", 32),
+      envBool(env, "SPARK_GRAFT_AQE", true), Some("64MB")),
+      envInt(env, "SPARK_GRAFT_BENCH_PARTS", 32))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val rep = sys.env.getOrElse("SPARK_GRAFT_H2O_REP", "100").toInt
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_BENCH_SHUFFLE", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (settings, parts) = H2oBench.settings(sys.env)
+    val spark = GraftSession.local(settings)
 
     // setup (untimed, mirrors db-benchmark loading the fact into memory).
     // MEMORY_AND_DISK, not MEMORY_ONLY: when the inflated fact outgrows
@@ -128,7 +126,7 @@ object H2oBench {
     // partitions must spill to disk, not silently re-run the crossJoin
     // derivation inside every timed query.
     val x = buildX(spark, sfDir, rep)
-      .repartition(sys.env.getOrElse("SPARK_GRAFT_BENCH_PARTS", "32").toInt)
+      .repartition(parts)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val rows = x.count()
 
@@ -136,7 +134,7 @@ object H2oBench {
     def run(name: String, f: () => DataFrame): Double = {
       val t0 = System.nanoTime()
       try f().write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
+      catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[h2o] $name failed: ${e.getMessage}"); return -1.0 }
       (System.nanoTime() - t0) / 1e9
     }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Pipeline-operator benchmark: times registry queries (default: the
   * training-pipeline set) on SPARK_GRAFT_SF_DIR through the noop sink,
@@ -74,19 +73,14 @@ object PipeBench {
     "stat_wilcoxon_signed_rank", "event_poisson_dispersion",
     "stat_bartlett", "stat_granger_causality", "emb_ivf_recall")
 
+  /** `SPARK_GRAFT_CPUS` cores (default 32), 32 shuffle partitions, AQE on. */
+  def settings(env: Map[String, String]): GraftSession.Local =
+    GraftSession.Local(GraftSession.cpus(env, 32), 32, aqe = true)
+
   def main(args: Array[String]): Unit = {
     val loadBefore = Bench.loadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(settings(sys.env))
     val ops = if (args.nonEmpty) args.toSeq else DefaultOps
     def run(name: String): Double = {
       val t0 = System.nanoTime()

@@ -2882,10 +2882,10 @@ object Pipeline {
     * keyed aggregate over the event stream (monetary through the exact
     * decimal-sum lane); the corpus max timestamp attaches as a broadcast
     * single-row aggregate. Each quartile assignment runs through
-    * [[Q.distNtile]] (range shuffle + parallel per-partition rank +
-    * broadcast offsets), so even at hundreds of millions of users no
-    * single partition ever sorts the whole dimension — while remaining
-    * bit-identical to the `ntile(4)` oracle (user_id tie-break). */
+    * [[Q.ntileBucketCol]] (narrow range shuffle + broadcast boundary
+    * rows), so even at hundreds of millions of users no single partition
+    * ever sorts the whole dimension — while remaining bit-identical to
+    * the `ntile(4)` oracle (user_id tie-break). */
   def eventRfm(s: SparkSession, d: String): DataFrame = {
     val ev = t(s, d, "events")
     val maxTs = broadcast(ev.agg(max(col("ts")).as("max_ts")))
@@ -2896,7 +2896,7 @@ object Pipeline {
     // Round 20 (r19 verdict item 6, guide §2.3–2.4): pin the per-user
     // frame ONCE, projected to exactly the output columns, and assign
     // each quartile via [[Q.ntileByBoundaries]] — the three chained
-    // [[Q.distNtile]] calls each range-shuffled and checkpointed the
+    // rank-based ntiles each range-shuffled and checkpointed the
     // progressively wider frame (28 stages); now only narrow (key,
     // user_id) projections shuffle for the boundary passes and the
     // quartiles are map-side comparisons against 3 broadcast boundary
@@ -4260,7 +4260,7 @@ object Pipeline {
     // computed in ONE projection over the distinct-content reps and
     // pinned by ONE localCheckpoint — previously `bands` and `repStats`
     // each re-derived their kernel column from a text-carrying repDocs
-    // pin and pinned it separately (three barriers; the r18 StageProbe
+    // pin and pinned it separately (three barriers; the r18 stage timeline
     // read 186 + 97 ms of barrier stages plus their driver gaps). Both
     // kernels still fold exactly once per rep (the checkpoint
     // materializes them); `bands` re-runs only the cheap band-slice

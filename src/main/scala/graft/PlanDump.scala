@@ -1,14 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
 
 /** Plan-evidence dump: writes `.explain("formatted")` output for each
   * named registry query to `<outDir>/<name>_<suffix>.txt`, under the
-  * exact Bench session config (local[32], parts=8, shuffle=4, AQE off —
-  * override with the usual SPARK_GRAFT_* envs), so optimization rounds
-  * can commit before/after plan shapes the judge can diff without
-  * running Spark. Usage: runMain graft.PlanDump <outDir> <suffix> [name...]
+  * exact Bench session config ([[Bench.settings]], same SPARK_GRAFT_*
+  * envs), so optimization rounds can commit before/after plan shapes a
+  * reader can diff without running Spark.
+  * Usage: runMain graft.PlanDump <outDir> <suffix> [name...]
   * (no names = all of Tpch.benchOrder). */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -19,26 +18,8 @@ object PlanDump {
     }
     val (Array(outDir, suffix), only) = args.splitAt(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // mirror Bench's core-derived defaults so dumped plans match the
-    // session the bench actually runs (r20: 8/4 pinned → cpus-derived)
-    val cpusN = try cpus.trim.toInt catch { case _: NumberFormatException => 32 }
-    val parts = sys.env.getOrElse("SPARK_GRAFT_BENCH_PARTS",
-      math.max(8, cpusN).toString).toInt
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_BENCH_SHUFFLE",
-      math.max(4, cpusN / 4).toString)
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "false")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (settings, parts) = Bench.settings(sys.env)
+    val spark = GraftSession.local(settings)
     // SPARK_GRAFT_BENCH_UNCACHED=true mirrors Bench's uncached lane:
     // plans then show the parquet scans (PushedFilters / ReadSchema)
     // instead of InMemoryRelation.

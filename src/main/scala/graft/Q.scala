@@ -117,20 +117,6 @@ object Q {
   /** Timestamp literal (all date columns in the corpus are timestamps). */
   def ts(s: String): Column = to_timestamp(lit(s))
 
-  /** A/B escape hatch for [[ddec]] (measurement only): `off` routes the
-    * quantization through the engine's `Cast`, so the Cast-node swap can
-    * be timed under the exact grading protocol in back-to-back legs.
-    * Both paths are value-identical (FastDoubleToDecimal's property
-    * pins), so the toggle can never change a result, only per-row cost.
-    * SCOPE: this reverts ONLY the expression-level Cast swap. The
-    * kernel-internal scaledLong rewrites (GramDecimalSum,
-    * DecimalSqDevSum, PqArgmin, WordEntropyStats, Rake.quantize12,
-    * DecimalEntry) stay on the fast path regardless — their A/B
-    * instrument is [[KernelAB]], so an `off` leg is NOT a full pre-r19
-    * baseline. */
-  private val ddecFast: Boolean =
-    !sys.env.get("SPARK_GRAFT_DDEC_FAST").contains("off")
-
   /** Per-row double→decimal quantization under every exact-sum aggregate:
     * bit-identical to `c.cast(DecimalType(precision, scale))` (non-ANSI)
     * but ~30× cheaper per row — the r19 fixed-point fast path
@@ -138,12 +124,10 @@ object Q {
     * cast's `Double.toString` + BigDecimal parse. The child must already
     * be a double (every corpus measure is). */
   def ddec(c: Column, precision: Int = 30, scale: Int = 6): Column =
-    if (ddecFast)
-      org.apache.spark.sql.graftcol.NativeColumn.column(
-        graft.functions.FastDoubleToDecimal(
-          org.apache.spark.sql.graftcol.NativeColumn.expression(c),
-          precision, scale))
-    else c.cast(DecimalType(precision, scale))
+    org.apache.spark.sql.graftcol.NativeColumn.column(
+      graft.functions.FastDoubleToDecimal(
+        org.apache.spark.sql.graftcol.NativeColumn.expression(c),
+        precision, scale))
 
   /** Exact, order-independent sum of a double measure, surfaced as double.
     * Scale 6 because every corpus measure is a product of ≤3 two-decimal
@@ -173,8 +157,8 @@ object Q {
   /** Per-partition row counts by partition index — ONE no-shuffle job
     * over the internal-row iterators. Replaces the
     * `groupBy(spark_partition_id())` census, which paid a hash Exchange
-    * of the whole frame just to count partition sizes (round 20; the
-    * r19 StageProbe rows show that exchange on every census). The input
+    * of the whole frame just to count partition sizes (round 20; r19's
+    * stage timelines show that exchange on every census). The input
     * must be pinned (localCheckpoint) when the caller reads it again:
     * range shuffles re-sample boundaries on re-evaluation. */
   private[graft] def partitionSizes(df: DataFrame): Array[Long] =
@@ -192,62 +176,31 @@ object Q {
   private[graft] def rangeParts(df: DataFrame): Int = math.max(1,
     df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt)
 
-  /** Distributed exact ntile: SQL-identical buckets to
-    * `ntile(buckets) OVER (ORDER BY order...)` with no single-partition
-    * global sort. Topology: range repartition on the order key → per-
-    * partition rank (parallel window keyed by the physical partition id) →
-    * partition-size offsets cumsum'd on the driver (a partition-count-sized
-    * collect — the same bookkeeping `RDD.zipWithIndex` does) broadcast back.
-    * Bucket from the 0-based global position by the standard ntile split
-    * (first n%B buckets take one extra row), so the result is bit-identical
-    * to the engine builtin while every heavy stage stays parallel. The
-    * order must be a total order (add a key tie-break) for reproducibility. */
-  def distNtile(df: DataFrame, buckets: Int, out: String, order: Column*): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val keyed = df
-      .repartitionByRange(rangeParts(df), order: _*)
-      .sortWithinPartitions(order: _*)
-      .withColumn("__pid", spark_partition_id())
-      // consumed twice (size census + rank join): pin partition contents
-      .localCheckpoint()
-    val sizes = keyed.groupBy("__pid").agg(count(lit(1)).as("pn")).collect()
-      .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val n = sizes.map(_._2).sum
-    val q = n / buckets
-    val r = n % buckets
-    val offsets = sizes.map(_._1).zip(sizes.map(_._2).scanLeft(0L)(_ + _).dropRight(1))
-    val spark = df.sparkSession
-    import spark.implicits._
-    val offDf = broadcast(offsets.toSeq.toDF("__pid", "__off"))
-    val w = Window.partitionBy("__pid").orderBy(order: _*)
-    val bin =
-      if (q == 0L) s"__pos + 1"
-      else s"CASE WHEN __pos < ${r * (q + 1)} THEN __pos div ${q + 1} + 1 " +
-        s"ELSE (__pos - ${r * (q + 1)}) div $q + $r + 1 END"
-    keyed.join(offDf, "__pid")
-      .withColumn("__pos", col("__off") + row_number().over(w) - 1)
-      .withColumn(out, expr(bin).cast("long"))
-      .drop("__pid", "__off", "__pos")
-  }
+  /** Largest `buckets` [[ntileBucketCol]] accepts. The assignment is a sum
+    * of buckets-1 lexicographic comparisons (O(buckets × order columns)
+    * expression nodes, all evaluated per row) and the boundary rows are
+    * collected to the Spark driver, so the bucket count is bounded loudly;
+    * callers use 4–10. */
+  val MaxNtileBuckets: Int = 256
 
   /** Distributed exact ntile via broadcast boundary rows — SQL-identical
-    * buckets to [[distNtile]] (and hence to `ntile(buckets) OVER (ORDER
-    * BY order...)`), but the frame being bucketed NEVER shuffles: only a
-    * narrow projection of the order columns goes through the range
-    * shuffle, the buckets-1 exact boundary rows (the last order tuple of
-    * each bucket) are collected, and the assignment is a map-side
+    * buckets to `ntile(buckets) OVER (ORDER BY order...)` without a
+    * single-partition global sort, and the frame being bucketed NEVER
+    * shuffles: only a narrow projection of the order columns goes through
+    * the range shuffle, the buckets-1 exact boundary rows (the last order
+    * tuple of each bucket) are collected, and the assignment is a map-side
     * lexicographic comparison against those broadcast literals.
     *
     * Motivation (r19 verdict item 6 / guide §2.3–2.4): event_rfm chained
-    * three [[distNtile]] calls, each range-shuffling and checkpointing
+    * three range-shuffle + per-partition-rank ntiles, each checkpointing
     * the progressively wider user frame. With boundaries, the three
     * quartile columns are plain projections over one pinned frame —
     * per ntile the shuffle carries only the order columns and nothing
     * joins back.
     *
-    * Requirements (same as [[distNtile]]): the order must be a TOTAL
-    * order (tie-break key), so "row sorts strictly after boundary k" is
-    * exactly "global position > boundary position". Null order values
+    * Requirements: the order must be a TOTAL order (tie-break key), so
+    * "row sorts strictly after boundary k" is exactly "global position >
+    * boundary position". Null order values
     * are handled with Spark's default null placement (asc = nulls first,
     * desc = nulls last). The caller should pin `df` if its lineage is
     * expensive — the frame is traversed once per ntile for the boundary
@@ -265,6 +218,8 @@ object Q {
     * then plain projections composed on the calling thread). */
   def ntileBucketCol(df: DataFrame, buckets: Int,
       order: Column*): Column = {
+    require(buckets >= 1 && buckets <= MaxNtileBuckets,
+      s"ntile buckets must be in [1, $MaxNtileBuckets], got $buckets")
     import org.apache.spark.sql.graftcol.NativeColumn
     // split each order Column into (value column, ascending?)
     val parsed: Seq[(Column, Boolean)] = order.map(NativeColumn.sortOrder)
@@ -282,9 +237,9 @@ object Q {
     val n = sizes.sum
     val q = n / buckets
     val r = n % buckets
-    // last 0-based global position of bucket k (k = 1..buckets-1); the
-    // same split [[distNtile]]'s bin expression encodes (first n%B
-    // buckets take q+1 rows). q == 0 → each row its own bucket.
+    // last 0-based global position of bucket k (k = 1..buckets-1) under
+    // the standard ntile split (first n%B buckets take q+1 rows).
+    // q == 0 → each row its own bucket.
     val boundPos: Seq[Long] = (1 until buckets).map { k =>
       if (q == 0L) k - 1L
       else if (k <= r) k.toLong * (q + 1) - 1
@@ -359,7 +314,7 @@ object Q {
     * join — which LOOKED parallel but paid a full extra Exchange (the
     * checkpoint scan reports UnknownPartitioning, so the window
     * re-shuffled the whole frame by `__pid`) plus a census exchange; the
-    * r19/r20 StageProbe rows show both. The order must be a total order. */
+    * r19/r20 stage timelines show both. The order must be a total order. */
   def distPos(df: DataFrame, out: String, order: Column*): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
     import org.apache.spark.sql.graftcol.NativeFrame
@@ -396,10 +351,11 @@ object Q {
     * pin → one no-shuffle job summing each partition's weights → one
     * mapPartitions pass emitting `offset(partition) + running sum`
     * straight off the pinned sorted iterators (the same machinery as
-    * [[distPos]]). Null weights contribute 0, matching window-sum
-    * semantics. Also returns the grand total (= the last offset), which
-    * callers previously recomputed with a separate aggregate over the
-    * pin. The order must be a total order. */
+    * [[distPos]]). A null weight contributes 0, so rows ordered before
+    * the first non-null weight read 0 — unlike the window sum, which is
+    * NULL there. The output column is never null. Also returns the grand
+    * total (= the last offset), which callers previously recomputed with
+    * a separate aggregate over the pin. The order must be a total order. */
   private[graft] def distPrefixSumWithTotal(df: DataFrame, weight: String,
       out: String, order: Column*): (DataFrame, Long) = {
     import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}

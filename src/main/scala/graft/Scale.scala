@@ -519,7 +519,7 @@ object Scale {
     // of posexploding `ac` itself — posexplode(ac) makes the optimizer
     // infer `size(ac) > 0 AND isnotnull(ac)` below the projection
     // (InferFiltersFromGenerate), re-inlining the kernel so every vector
-    // paid the 256-term decimal argmin THREE times (StageProbe/explain
+    // paid the 256-term decimal argmin THREE times (stage timeline/explain
     // caught `Filter (size(pq_argmin(…)) > 0) AND isnotnull(pq_argmin(…))`
     // under `Project pq_argmin(…)`). With a foldable generator child the
     // kernel folds ONCE per vector in the project below the Generate.

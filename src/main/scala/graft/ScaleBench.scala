@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesizes an SF1-equivalent corpus by key-shifted replication of the
@@ -18,20 +18,16 @@ import org.apache.spark.sql.functions._
   * then run graft.Bench with SPARK_GRAFT_SF_DIR=outDir.
   */
 object ScaleBench {
+  /** 32 cores and 32 shuffle partitions whatever the env, AQE on. */
+  val settings: GraftSession.Local = GraftSession.Local(32, 32, aqe = true)
+
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
     val src = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(2).getOrElse("/root/repo/target/sfscale")
     val OFF = 100000000L
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(settings)
 
     /** Union `factor` key-shifted copies. */
     def replicate(df: DataFrame, keyCols: Seq[String]): DataFrame =

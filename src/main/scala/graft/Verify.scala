@@ -1,19 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** `SPARK_GRAFT_CPUS` cores (default 4), as many shuffle partitions,
+    * AQE on. */
+  def settings(env: Map[String, String]): GraftSession.Local = {
+    val cpus = GraftSession.cpus(env, 4)
+    GraftSession.Local(cpus, cpus, aqe = true)
+  }
+
   def main(args: Array[String]): Unit = {
     val (Array(sfDir, outDir), only) = args.splitAt(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(settings(sys.env))
     new java.io.File(outDir).mkdirs()
     // Stale-dump guard (r19 verdict item 7): stamp the run's start BEFORE
     // any dump is written. tools/selfcheck.py refuses any query dump older
@@ -21,15 +20,20 @@ object Verify {
     // run's dump in place) can no longer pass the gate silently.
     Files.writeString(Paths.get(s"$outDir/run_started"),
       java.time.Instant.now().toString)
-    SparkEntry.queries
+    // NonFatal only: a fatal error (OOM, stack overflow) kills the run
+    // instead of being logged as one more failed query
+    val failed = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      .toSeq.flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
+        }
       }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -46,5 +50,11 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // exit non-zero after both are written, naming every query that threw
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] ${failed.size} queries failed: ${failed.mkString(" ")}")
+      sys.exit(1)
+    }
   }
 }

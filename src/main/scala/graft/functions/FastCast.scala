@@ -12,8 +12,8 @@ import org.apache.spark.sql.types._
   *
   * The engine's cast builds `Double.toString(x)`, parses it into a
   * BigDecimal and rounds HALF_UP to the target scale (~260 ns/row, one
-  * String + one BigDecimal allocation per measure per row — KernelAB
-  * `cast`). This expression routes the common case through
+  * String + one BigDecimal allocation per measure per row — r19
+  * same-JVM microbenchmark). This expression routes the common case through
   * [[GramDecimalSum.scaledLong]]'s exact 128-bit fixed-point path
   * (~50 ns incl. the Decimal box) and replays the engine's own slow path
   * for everything else, so the result is bit-identical to `Cast` in ALL

@@ -38,7 +38,7 @@ import org.apache.spark.sql.types._
   * integer addition on the unscaled longs, spilling a cell to java
   * `BigDecimal` on the first overflowing add — both EXACT at scale s,
   * hence order-free, matching Spark's decimal `sum` under any
-  * partitioning (the r18 StageProbe adjudicated the BigDecimal
+  * partitioning (the r18 stage timeline adjudicated the BigDecimal
   * multiply-add stream as emb_covariance's dominant cost; the long
   * path removes the per-term BigDecimal parse/setScale/add churn).
   * Group-existence parity with the explode twin: a cell

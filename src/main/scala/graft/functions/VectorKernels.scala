@@ -580,7 +580,7 @@ object DecimalSqDevSum {
     * BigDecimal-per-term loop it replaces: a term whose scaled form fits
     * a Long has ≤ 19 digits, so the old path's `changePrecision(38, s)`
     * gate always passed for it, and a Long-held final sum (≤ 19 digits)
-    * always fits `(38, s)`. The r18 StageProbe adjudicated the per-term
+    * always fits `(38, s)`. The r18 stage timeline adjudicated the per-term
     * BigDecimal parse/setScale/add churn as the dominant cost of every
     * [[DecimalSqDevSum]]/[[DecimalSqDevArgmin]] consumer (triplet
     * mining's margin pass, the IVF/kmeans assign stages). */

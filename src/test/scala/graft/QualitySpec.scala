@@ -149,7 +149,7 @@ class QualitySpec extends AnyFunSuite {
     }
   }
 
-  test("distNtile/distPos follow spark.sql.shuffle.partitions and stay exact") {
+  test("ntileByBoundaries/distPos follow spark.sql.shuffle.partitions and stay exact") {
     // the exact-rank primitive must derive its range-partition width from
     // the session's parallelism (not a literal) and emit identical results
     // at any setting — verified here at a non-default width
@@ -160,13 +160,13 @@ class QualitySpec extends AnyFunSuite {
       conf.set("spark.sql.shuffle.partitions", "5")
       val src = Q.t(spark, sf, "orders").select(col("o_orderkey"), col("o_totalprice"))
       assert(Q.rangeParts(src) == 5, "width must follow the session conf")
-      val dist = Q.distNtile(src, 7, "b", col("o_totalprice"), col("o_orderkey"))
+      val dist = Q.ntileByBoundaries(src, 7, "b", col("o_totalprice"), col("o_orderkey"))
         .collect().map(r => r.getAs[Long]("o_orderkey") -> r.getAs[Long]("b")).toMap
       val twin = src.withColumn("b",
           ntile(7).over(Window.orderBy(col("o_totalprice"), col("o_orderkey")))
             .cast("long"))
         .collect().map(r => r.getAs[Long]("o_orderkey") -> r.getAs[Long]("b")).toMap
-      assert(dist == twin, "distNtile must match the builtin at width 5")
+      assert(dist == twin, "ntileByBoundaries must match the builtin at width 5")
       val pos = Q.distPos(src, "p", col("o_totalprice"), col("o_orderkey"))
         .collect().map(r => r.getAs[Long]("o_orderkey") -> r.getAs[Long]("p")).toMap
       val posTwin = src.withColumn("p",
@@ -218,6 +218,36 @@ class QualitySpec extends AnyFunSuite {
       assert(mine(tiny, b, col("v").desc, col("k")) ==
         builtin(tiny, b, col("v").desc, col("k")), s"nulls desc, b=$b")
     }
+  }
+
+  test("ntileByBoundaries rejects a bucket count above the cap") {
+    import spark.implicits._
+    val tiny = Seq(1L, 2L, 3L).toDF("k")
+    val e = intercept[IllegalArgumentException](
+      Q.ntileByBoundaries(tiny, Q.MaxNtileBuckets + 1, "b", col("k")))
+    assert(e.getMessage.contains(s"${Q.MaxNtileBuckets + 1}"))
+    val atCap = Q.ntileByBoundaries(tiny, Q.MaxNtileBuckets, "b", col("k"))
+      .collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("b")).toMap
+    assert(atCap == Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
+  }
+
+  test("distPrefixSum: a null weight contributes 0, never NULL (not window-sum)") {
+    import org.apache.spark.sql.expressions.Window
+    val src = Q.t(spark, sf, "orders").select(col("o_orderkey").as("k"),
+      when(col("o_orderkey") % 3 =!= 0 && col("o_orderkey") > 40,
+        col("o_custkey").cast("long")).as("w"))
+    val (cum, total) = Q.distPrefixSumWithTotal(src, "w", "c", col("k"))
+    val got = cum.collect().map(r => r.getAs[Long]("k") -> r.get(r.fieldIndex("c"))).toMap
+    val window = src.withColumn("c", sum(col("w")).over(Window.orderBy(col("k"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .collect().map(r => r.getAs[Long]("k") -> r.get(r.fieldIndex("c"))).toMap
+    // leading rows (no non-null weight yet): 0 here, NULL in the window sum
+    val leading = window.collect { case (k, null) => k }
+    assert(leading.nonEmpty, "the fixture must start with null weights")
+    leading.foreach(k => assert(got(k) == 0L, s"k=$k"))
+    assert(got.values.forall(_ != null), "the prefix sum is never null")
+    assert(got == window.map { case (k, v) => k -> (if (v == null) 0L else v) })
+    assert(total == src.agg(sum("w")).head.getLong(0))
   }
 
   test("rolling corr: contiguous hourly grid, |r|<=1, frame caps at 24") {
