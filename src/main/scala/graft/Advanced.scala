@@ -298,7 +298,7 @@ object Advanced {
   def aggApproxTopk(s: SparkSession, d: String): DataFrame = {
     graft.functions.ApproxTopK.register(s)
     t(s, d, "documents")
-      .select(explode(expr("split(trim(text), '\\\\s+')")).as("w"))
+      .select(explode(expr(wordsExpr)).as("w"))
       .createOrReplaceTempView("doc_words")
     s.sql(
       """SELECT CAST(pos + 1 AS BIGINT) AS rank, s.item AS word,

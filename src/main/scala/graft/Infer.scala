@@ -199,9 +199,9 @@ object Infer {
   def statBootstrapCi(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents").select("doc_id", "n_chars")
     val bdf = broadcast(s.range(1, 101).toDF("b"))
-    val u = expr("cast(conv(substring(md5(cast(concat(" +
-      "cast(doc_id as string), '_', cast(b as string)) as binary)), 1, 15)" +
-      ", 16, 10) as bigint)") / lit(1152921504606846976.0)
+    val u = expr(md5Lane("cast(concat(" +
+      "cast(doc_id as string), '_', cast(b as string)) as binary)")) /
+      lit(1152921504606846976.0)
     val w = PoissonCdf.zipWithIndex.foldRight(lit(8L): Column) {
       case ((thr, k), rest) => when(u < thr, lit(k.toLong)).otherwise(rest)
     }

@@ -622,9 +622,9 @@ object Insight {
       .select(col("vec_id"), (col("i0") + 1).as("i"),
         col("xf").cast("double").as("x"))
     val jdf = broadcast(s.range(1, 17).toDF("j"))
-    val sgn = expr("case when pmod(cast(conv(substring(md5(cast(" +
-      "concat(cast(j as string), '_', cast(i as string)) as binary)), 1, 15)" +
-      ", 16, 10) as bigint), 2) = 0 then 1.0 else -1.0 end")
+    val sgn = expr("case when pmod(" + md5Lane("cast(" +
+      "concat(cast(j as string), '_', cast(i as string)) as binary)") +
+      ", 2) = 0 then 1.0 else -1.0 end")
     val proj = e.crossJoin(jdf)
       .groupBy("vec_id", "j")
       .agg((sum(ddec(sgn * col("x"), precision = 38, scale = 12))

@@ -16,16 +16,17 @@ import Q._
   * Scale design notes (the 100 TB shapes, not just the sf0.01 ones):
   *  - `graph_components` links every bucket member to the bucket MINIMUM
   *    instead of emitting all in-bucket pairs (the "star" reduction —
-  *    O(bucket) edges, not O(bucket²)) and then runs min-label
-  *    propagation to a driver-checked fixpoint; every iteration is one
-  *    keyed shuffle, never a global structure.
+  *    O(bucket) edges, not O(bucket²)) and then solves components with
+  *    [[componentLabels]]: a driver union-find under the driver cap, a
+  *    pointer-jumping min-label fixpoint over it, where every iteration
+  *    is keyed shuffles, never a global structure.
   *  - `emb_kmeans` is the canonical distributed training loop: centroids
   *    are k×d driver state constant-folded into each assignment's plan,
   *    per-vector distances are map-side folds, the update is one keyed
   *    reduce — the corpus is scanned, never collected.
   *  - `mix_importance_resample` is a distributed prefix sum (range
-  *    shuffle → per-partition running sum → partition-count-sized offset
-  *    broadcast), the same exact topology as [[Q.distPos]].
+  *    shuffle → per-partition weight census → one pass emitting
+  *    offset + running sum), the same exact-rank core as [[Q.distPos]].
   *  - Every double statistic is either an exact-decimal sum surfaced as
   *    double or a fixed expression tree over such sums, so results are
   *    bit-identical to the single-threaded DuckDB oracle at any
@@ -34,35 +35,27 @@ import Q._
 object Learn {
 
   private val normExpr = "regexp_replace(lower(trim(text)), '\\\\s+', ' ')"
-  private val wordsExpr = "split(trim(text), '\\\\s+')"
 
   // ---------- connected components over the dedup bucket graph ----------
 
   /** Resolve near-duplicate documents into transitive groups: bucket by
     * two fingerprint families (full normalized text + 60-char prefix —
     * a doc can chain groups by matching one doc exactly and another by
-    * prefix), emit star edges member→bucket-min, then min-label
-    * propagation to fixpoint. Each iteration pairs the neighbor-min step
-    * with a pointer-jumping shortcut (label ← label's label — every label
-    * value is itself a node id, so the self-join is total): the
-    * propagation front doubles per round, so convergence is O(log
-    * diameter), not O(diameter), and long alternating fingerprint chains
-    * cannot outrun the 25-iteration cap. Non-convergence within the cap
-    * fails loudly (`require`) rather than emitting unconverged labels;
-    * each superseded label checkpoint is unpersisted once the new one is
-    * materialized, so executor storage holds ≤2 label snapshots at any
-    * time. Emits one row per multi-document component. The same algorithm
-    * resolves MinHash-band buckets at production scale; the fingerprint
-    * families keep the oracle tractable.
-    *
-    * Round-16 adaptive solve (cf. [[Pipeline.dedupGroups]]): the pinned
-    * star-edge list is COUNTed (no driver memory), and under
-    * [[Pipeline.DedupFixpointDriverCap]] components solve with the
-    * shared union-by-min-root union-find in one collect; over the cap
-    * nothing is collected and the distributed fixpoint below runs
-    * against the same pinned table. ComponentPathsSpec pins the two
-    * paths equal. */
-  def graphComponents(s: SparkSession, d: String): DataFrame = {
+    * prefix), emit star edges member→bucket-min, then solve connected
+    * components with [[componentLabels]]. Emits one row per
+    * multi-document component. The same algorithm resolves MinHash-band
+    * buckets at production scale; the fingerprint families keep the
+    * oracle tractable. */
+  def graphComponents(s: SparkSession, d: String): DataFrame =
+    componentLabels(s, graphComponentEdges(s, d))
+      .groupBy(col("c").as("comp_id"))
+      .agg(count(lit(1)).as("n_docs"),
+        min("node").as("min_doc"), max("node").as("max_doc"))
+      .orderBy(col("n_docs").desc, col("comp_id"))
+
+  /** [[graphComponents]]' star edges (u, v): every fingerprint-bucket
+    * member → its bucket minimum. */
+  private[graft] def graphComponentEdges(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents")
     val norm = expr(normExpr)
     val buckets = docs.select(col("doc_id"),
@@ -70,35 +63,41 @@ object Learn {
           concat(lit("f#"), md5(norm.cast("binary"))),
           concat(lit("p#"), md5(substring(norm, 1, 60).cast("binary"))))).as("k"))
     val roots = buckets.groupBy("k").agg(min("doc_id").as("root"))
-    val (edges, edgeIds) = pinnedIds(s) {
-      buckets.join(roots, "k")
-        .filter(col("doc_id") =!= col("root"))
-        .select(col("doc_id").as("u"), col("root").as("v")).distinct()
-        .localCheckpoint()
-    }
-    // adaptive small-graph solve: count the pinned star-edge list (no
-    // driver memory), collect + union-find only when it fits the cap
+    buckets.join(roots, "k")
+      .filter(col("doc_id") =!= col("root"))
+      .select(col("doc_id").as("u"), col("root").as("v")).distinct()
+  }
+
+  /** Connected components of an undirected edge list (u, v): one
+    * (node, c) row per edge endpoint, c = its component's minimum node
+    * id — the one component solve behind [[graphComponents]] and
+    * [[Pipeline.dedupGroups]]. Adaptive like Spark's broadcast
+    * threshold: the edge list is pinned once and COUNTed (no driver
+    * memory); at or under [[Pipeline.DedupFixpointDriverCap]] it is
+    * collected and solved by the driver union-find
+    * [[Pipeline.repComponentsDriver]], which skips the fixpoint's
+    * per-round stage launches; over the cap nothing is collected and
+    * [[componentLabelsDistributed]] runs against the same pinned table.
+    * The pin is released before returning. */
+  private[graft] def componentLabels(s: SparkSession, edges: DataFrame): DataFrame = {
+    val (p, pIds) = pinnedIds(s)(edges.localCheckpoint())
     val lbl =
-      if (edges.count() <= Pipeline.DedupFixpointDriverCap) {
+      if (p.count() <= Pipeline.DedupFixpointDriverCap) {
         // typed collect: no Row layer on the at-cap driver transient
         // (cf. DedupFixpointDriverCap's memory math)
         implicit val enc = org.apache.spark.sql.Encoders.tuple(
           org.apache.spark.sql.Encoders.scalaLong,
           org.apache.spark.sql.Encoders.scalaLong)
-        s.createDataFrame(Pipeline.repComponentsDriver(
-            edges.as[(Long, Long)].collect()))
+        s.createDataFrame(Pipeline.repComponentsDriver(p.as[(Long, Long)].collect()))
           .toDF("node", "c")
-      } else componentLabelsDistributed(s, edges)
-    release(s, edgeIds) // result depends only on lbl / its checkpoint
-    lbl.groupBy(col("c").as("comp_id"))
-      .agg(count(lit(1)).as("n_docs"),
-        min("node").as("min_doc"), max("node").as("max_doc"))
-      .orderBy(col("n_docs").desc, col("comp_id"))
+      } else componentLabelsDistributed(s, p)
+    // dead on both paths: collected, or copied into the fixpoint's own pins
+    release(s, pIds)
+    lbl
   }
 
   /** Track which RDDs `body` pins (cache/localCheckpoint) so iterative
-    * ops can release superseded snapshots explicitly. Shared with
-    * [[Pipeline.dedupGroups]]'s pinned pair table (round 17). */
+    * ops can release superseded snapshots explicitly. */
   private[graft] def pinnedIds(s: SparkSession)(
       body: => DataFrame): (DataFrame, Set[Int]) = {
     val pre = s.sparkContext.getPersistentRDDs.keySet.toSet
@@ -108,10 +107,18 @@ object Learn {
   private[graft] def release(s: SparkSession, ids: Set[Int]): Unit = ids.foreach(id =>
     s.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
 
-  /** Distributed min-label fixpoint over a star-edge list (u, v) — the
-    * over-cap path of [[graphComponents]]; one (node, c) row per edge
-    * endpoint with c = its component's minimum node id. LearnSpec pins
-    * it equal to [[Pipeline.repComponentsDriver]]. */
+  /** Distributed min-label fixpoint over a pinned edge list (u, v) — the
+    * over-cap path of [[componentLabels]], with the same (node, c)
+    * output. Each iteration pairs the neighbor-min step with a
+    * pointer-jumping shortcut (label ← label's label — every label value
+    * is itself a node id, so the self-join is total): the propagation
+    * front doubles per round, so convergence is O(log diameter), not
+    * O(diameter), and long chains cannot outrun the 25-iteration cap.
+    * Non-convergence within the cap fails loudly (`require`) rather than
+    * emitting unconverged labels; each superseded label checkpoint is
+    * released once the new one is materialized, so executor storage
+    * holds ≤2 label snapshots at any time. ComponentLabelsSpec pins it
+    * equal to [[Pipeline.repComponentsDriver]]. */
   private[graft] def componentLabelsDistributed(
       s: SparkSession, edges: DataFrame): DataFrame = {
     val (adj, adjIds) = pinnedIds(s) {
@@ -122,13 +129,11 @@ object Learn {
       adj.select(col("u").as("node"), col("u").as("c")).distinct()
         .localCheckpoint()
     }
-    // Σc convergence (round 15, the dedupGroups argument): every node's
-    // label is non-increasing under both the neighbor-min and the
-    // pointer jump, so Σc strictly decreases at every non-converged
-    // iteration and stalls exactly at the fixpoint — the per-iteration
-    // join of next against the superseded snapshot (one extra shuffle
-    // per round) is gone; the convergence probe is a d-bounded agg over
-    // the already-checkpointed labels. Summed as decimal(38,0), not long:
+    // Σc convergence: every node's label is non-increasing under both
+    // the neighbor-min and the pointer jump, so Σc strictly decreases at
+    // every non-converged iteration and stalls exactly at the fixpoint;
+    // the convergence probe is a d-bounded agg over the
+    // already-checkpointed labels. Summed as decimal(38,0), not long:
     // a long sum overflows at node-id×count scale (ANSI throw / non-ANSI
     // wraparound would make "sum stalled ⇒ fixpoint" merely probabilistic);
     // the decimal sum keeps the monotone-stall argument exact at any scale.
@@ -218,38 +223,10 @@ object Learn {
     val seeds = vecs.orderBy("vec_id").limit(K).collect() // bounded TakeOrdered
     require(seeds.length == K,
       s"embedding table has fewer than $K vectors to seed k-means")
-    var cents: Array[(Long, Array[Double])] = seeds.zipWithIndex.map {
+    // the single Lloyd update, shared with the IVF training loop
+    val cents = Pipeline.lloydUpdate(vecs, seeds.zipWithIndex.map {
       case (r, i) => ((i + 1).toLong, r.getSeq[Double](1).toArray)
-    }
-    // struct('cid', 'dist'): first-minimum argmin + its distance, all
-    // map-side over the constant-folded centroid matrix — the native
-    // NearestCentroid kernel (round 15), one generated loop per row with
-    // the same sequential squared-difference fold the HOF twin computed
-    // (LearnSpec asserts kernel == HOF on this corpus)
-    def asgExpr(cs: Array[(Long, Array[Double])]): Column =
-      org.apache.spark.sql.graftcol.NativeColumn.column(
-        graft.functions.NearestCentroid(
-          org.apache.spark.sql.graftcol.NativeColumn.expression(col("v")),
-          cs.map(_._2)))
-    // the single Lloyd update: keyed reduce → k×d driver state. VectorSum
-    // accumulates the d-length partial vectors map-side (one hash probe
-    // per row instead of posexplode's d); the driver-side sv/n divide is
-    // avg's own single IEEE division, so the centroids are bit-identical
-    // to the previous posexplode/avg plan's.
-    val upd = vecs.withColumn("cid", asgExpr(cents).getField("cid"))
-      .groupBy("cid")
-      .agg(graft.functions.VectorSum.vector_sum(col("v")).as("sv"),
-        count(lit(1)).as("n"))
-      .collect()
-    val next = upd.map { r =>
-      val n = r.getAs[Long]("n")
-      (r.getAs[Long]("cid"), r.getSeq[Double](1).map(_ / n).toArray)
-    }.sortBy(_._1)
-    // relabel to consecutive positions (an emptied cluster would desync
-    // positional assignment from stored ids — the IVF argument)
-    cents = next.zipWithIndex.map { case ((_, cv), i) => ((i + 1).toLong, cv) }
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    })
     val centRows: Array[(Long, Seq[Double])] =
       cents.map { case (cid, cv) => (cid, cv.map(r6).toSeq) }
     embKmeansOracle = Some(embKmeansSqlGen(centRows))
@@ -257,8 +234,8 @@ object Learn {
     val norms = broadcast(centRows.toSeq.map { case (cid, cv) =>
       (cid, math.sqrt(cv.map(x => x * x).sum))
     }.toDF("cid", "nrm"))
-    vecs.withColumn("st",
-        asgExpr(centRows.map { case (c, cv) => (c, cv.toArray) }))
+    vecs.withColumn("st", Pipeline.nearestCentroid(
+        centRows.map { case (c, cv) => (c, cv.toArray) }))
       .select(col("st").getField("cid").as("cid"),
         col("st").getField("dist").as("dist"))
       .groupBy("cid")
@@ -317,19 +294,11 @@ object Learn {
     * the DuckDB oracle — a float `/` would round through double and can
     * mis-floor once cw·M passes 2^53, i.e. exactly the 100 TB regime;
     * cw·M itself stays exact up to 2^63/M ≈ 9.5e16 cumulative chars,
-    * an order of magnitude past 100 TB). The cumulative sum is the
-    * distributed prefix-sum topology: range shuffle on doc_id →
-    * per-partition running sum → partition-count-sized offset broadcast,
-    * never a single-partition window. The standard corpus-mixing /
-    * importance-reweighting primitive. */
+    * an order of magnitude past 100 TB). The cumulative sum and the
+    * grand total come from [[Q.distPrefixSumWithTotal]] (range shuffle on
+    * doc_id, never a single-partition window). The standard
+    * corpus-mixing / importance-reweighting primitive. */
   def mixImportanceResample(s: SparkSession, d: String): DataFrame = {
-    // Round 20: the census+window prefix sum paid TWO hidden exchanges
-    // (the groupBy(__pid) census and the Window.partitionBy(__pid)
-    // running sum — the checkpoint scan reports UnknownPartitioning, so
-    // the "parallel" window re-shuffled the whole frame). distPrefixSum
-    // emits offset(partition)+running sum in one mapPartitions pass off
-    // the pinned sorted iterators, and the grand total comes back from
-    // the same census instead of a separate aggregate over the pin.
     val (cum, tw) = Q.distPrefixSumWithTotal(
       t(s, d, "documents")
         .select(col("doc_id"), col("n_chars").cast("long").as("w")),

@@ -138,9 +138,8 @@ object Mining {
     * in exactly one fold by construction; the audit is one keyed
     * aggregation. */
   def splitKfold(s: SparkSession, d: String): DataFrame = {
-    val fold = expr("pmod(cast(conv(substring(md5(cast(concat(" +
-      "cast(doc_id as string), '_fold') as binary)), 1, 15), 16, 10) " +
-      "as bigint), 5)")
+    val fold = expr("pmod(" + md5Lane("cast(concat(" +
+      "cast(doc_id as string), '_fold') as binary)") + ", 5)")
     val docs = t(s, d, "documents").withColumn("fold", fold)
     val g = docs.groupBy("fold").agg(
       count(lit(1)).as("docs"),

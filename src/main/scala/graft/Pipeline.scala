@@ -20,8 +20,6 @@ import Q._
   */
 object Pipeline {
 
-  private val wordsExpr = "split(trim(text), '\\\\s+')"
-
   // ---------- text analysis ----------
 
   /** Token counting: whitespace tokens, BPE-ish subword estimate, distinct
@@ -438,15 +436,6 @@ object Pipeline {
   private[graft] val NumHashes = graft.functions.MinHashSignature.NumHashes
   private[graft] val BandSize = graft.functions.MinHashSignature.BandSize
 
-  /** 60-bit hash lane from the first 15 hex chars of md5 — deliberately
-    * expressible in BOTH engines (Spark `conv(substr(md5,…),16,10)`,
-    * DuckDB `('0x' || substr(md5,…))::BIGINT`) so the LSH operators below
-    * get full DuckDB oracles instead of rows-only checks. */
-  private def md5Lane(sparkExpr: String): String =
-    s"cast(conv(substring(md5($sparkExpr), 1, 15), 16, 10) as bigint)"
-  private def md5LaneDuck(duckExpr: String): String =
-    s"(('0x' || substr(md5($duckExpr), 1, 15))::BIGINT)"
-
   /** The hyperplane coefficient matrix used by the embedding-LSH family
     * is a CONSTANT — it depends only on (plane, dim), not on the row —
     * so derive it ONCE driver-side (identical md5-lane arithmetic to the
@@ -662,14 +651,12 @@ object Pipeline {
     * cardinality grows as duplicate-group-size² even when the candidate
     * join doesn't (4.2M simhash pairs at the 10× stress corpus), while the
     * keep/remove decision per doc grows linearly. This operator collapses
-    * the verified MinHash candidate pairs into connected components via
-    * iterative min-label propagation — the same handle-based distributed
-    * fixpoint as [[Advanced.recReachability]]: every step is an equi-join
-    * + keyed aggregation (no driver-side graph), one job per iteration,
-    * superseded rounds explicitly unpersisted. Converges in O(component
-    * diameter) rounds; near-dup groups are dense (band collisions make
-    * them clique-like), so a handful of rounds suffice even at scale.
-    * Output: one row per doc appearing in any candidate pair, with
+    * the verified MinHash candidate pairs into connected components
+    * ([[Learn.componentLabels]]: a driver union-find while the pair graph
+    * fits [[DedupFixpointDriverCap]], a distributed pointer-jumping
+    * min-label fixpoint over it — components of a 100 TB pair graph never
+    * route through the driver, and the candidate-pair verify is computed
+    * once). Output: one row per doc appearing in any candidate pair, with
     * `keep_id` = min doc id of its component (keep iff doc_id = keep_id).
     * Oracle: DuckDB recursive CTE over the identical pair CTEs. */
   def dedupGroups(s: SparkSession, d: String): DataFrame = {
@@ -681,35 +668,10 @@ object Pipeline {
     // the min doc id the full-graph fixpoint would compute. At a
     // replicated corpus (group size g) this shrinks the fixpoint input
     // by ~g² while the output stays bit-identical.
-    //
-    // Round-16 adaptive solve (the broadcast-threshold posture): pin the
-    // pair table once, COUNT it (no driver memory), and when the whole
-    // graph fits under [[DedupFixpointDriverCap]] solve components with
-    // a driver union-find instead of paying the distributed fixpoint's
-    // per-round stage launches (measured at the 10× corpus: 242 edges /
-    // 470 nodes, yet ~1.2 s of scheduler floor across the init + 2
-    // convergence rounds). Over the cap the same distributed min-label
-    // fixpoint as before runs against the already-pinned table —
-    // components of a 100 TB pair graph never route through the driver,
-    // and the expensive candidate-pair verify is never computed twice.
-    // DedupComponentPathsSpec pins the two paths row-equal.
     val (members, repPairs) = minhashScaffold(s, d)
-    val (p, pIds) = Learn.pinnedIds(s) {
-      repPairs.select(col("r1"), col("r2")).localCheckpoint()
-    }
-    val labelsRep =
-      if (p.count() <= DedupFixpointDriverCap) {
-        implicit val enc = org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong)
-        s.createDataFrame(repComponentsDriver(p.as[(Long, Long)].collect()))
-          .toDF("rep", "label")
-      } else repComponentsDistributed(s, p)
-    // p's checkpointed RDD is dead on both paths here (driver: collected;
-    // distributed: labelsRep is itself checkpointed past it) — release it
-    // like every other pinned intermediate, one pinned RDD per call leaked
-    // otherwise (round-17 ADVICE).
-    Learn.release(s, pIds)
+    val labelsRep = Learn.componentLabels(s,
+        repPairs.select(col("r1").as("u"), col("r2").as("v")))
+      .toDF("rep", "label")
     // Expand rep components to documents. A doc is in the full pair set
     // iff its rep pairs with another rep OR its identical-text group has
     // ≥ 2 members (within-group pairs); its component label is its rep's
@@ -723,7 +685,7 @@ object Pipeline {
         coalesce(col("label"), col("rep")).as("keep_id"))
       .orderBy("doc_id")
   }
-  /** Driver-solve ceiling for [[dedupGroups]]' rep-pair graph: 2²¹ edges.
+  /** Driver-solve ceiling for [[Learn.componentLabels]]' edge list: 2²¹ edges.
     * Honest driver-memory math at the cap (round 17 — collected as a
     * typed `(Long, Long)` Dataset, solved in a primitive open-addressing
     * map): the collect materializes 2²¹ Tuple2 cells (~32–130 MB
@@ -739,12 +701,11 @@ object Pipeline {
     * collected. */
   private[graft] val DedupFixpointDriverCap: Long = 1L << 21
 
-  /** Driver union-find over rep pairs, union-by-min-root so every tree's
-    * root IS its component's minimum rep id — exactly the label the
-    * distributed min-propagation fixpoint converges to. Path-compressed;
-    * O(edges · α). Returns one (rep, min-label) row per node appearing
-    * in any pair — the same node set as `edges.select(src).distinct`
-    * over the doubled edge list. */
+  /** Driver union-find over an edge list, union-by-min-root so every
+    * tree's root IS its component's minimum node id — exactly the label
+    * the distributed min-propagation fixpoint converges to.
+    * Path-compressed; O(edges · α). Returns one (node, min-label) row per
+    * node appearing in any edge — the same node set as the fixpoint's. */
   private[graft] def repComponentsDriver(
       pairs: Array[(Long, Long)]): Seq[(Long, Long)] = {
     // primitive open-addressing parent map (round 17): two long[] at 0.5
@@ -828,65 +789,6 @@ object Pipeline {
     }
   }
 
-  /** The distributed min-label fixpoint over the rep-pair graph — the
-    * over-cap path of [[dedupGroups]] (and the shape that ran
-    * unconditionally through round 15). Σlabel strictly decreases until
-    * the fixpoint, so it doubles as the convergence check AND the
-    * per-round materialization action; superseded label checkpoints are
-    * released so executor storage holds ≤2 snapshots. */
-  private[graft] def repComponentsDistributed(
-      s: SparkSession, p: DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val edges = p.union(p.select(col("r2"), col("r1")))
-      .toDF("src", "dst").cache()
-    implicit val enc = org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaLong)
-    var labelsRdd = edges.select(col("src")).distinct()
-      .select(col("src").as("doc_id"), col("src").as("label"))
-      .as[(Long, Long)].rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    // decimal(38,0), not long (cf. Learn.componentLabelsDistributed): this
-    // is the exclusive path for graphs over the driver cap — exactly the
-    // scale where a long Σlabel overflows (ANSI throw / non-ANSI
-    // wraparound would make "sum stalled ⇒ fixpoint" merely probabilistic)
-    def labelSum(rdd: org.apache.spark.rdd.RDD[(Long, Long)]): java.math.BigDecimal =
-      s.createDataset(rdd).toDF("doc_id", "label")
-        .agg(coalesce(org.apache.spark.sql.functions.sum(
-            col("label").cast(org.apache.spark.sql.types.DecimalType(38, 0))),
-          lit(0).cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .head().getDecimal(0)
-    var sum = labelSum(labelsRdd)
-    var lastSum: java.math.BigDecimal = null
-    var iter = 0
-    while ((lastSum == null || sum.compareTo(lastSum) != 0) && iter < 50) {
-      lastSum = sum
-      val labels = s.createDataset(labelsRdd).toDF("doc_id", "label")
-      val nbrMin = edges.join(labels, col("dst") === col("doc_id"))
-        .groupBy(col("src")).agg(min(col("label")).as("nbr"))
-      val nextRdd = labels
-        .join(nbrMin, labels("doc_id") === nbrMin("src"), "left")
-        .select(labels("doc_id"),
-          least(col("label"), coalesce(col("nbr"), col("label"))).as("label"))
-        .as[(Long, Long)].rdd.persist(StorageLevel.MEMORY_AND_DISK)
-      sum = labelSum(nextRdd)
-      labelsRdd.unpersist(blocking = false)
-      labelsRdd = nextRdd
-      iter += 1
-    }
-    if (lastSum == null || sum.compareTo(lastSum) != 0)
-      throw new IllegalStateException(
-        s"dedup_groups: min-label propagation did not converge in $iter " +
-          "rounds — a component's diameter exceeds the iteration cap; " +
-          "returning partial labels would silently split groups")
-    // Materialize the rep labels (rep-bounded) so the persisted RDD and
-    // edge cache can be released — otherwise one MEMORY_AND_DISK RDD
-    // leaks per call.
-    val labelsRep = s.createDataset(labelsRdd).toDF("rep", "label")
-      .localCheckpoint()
-    labelsRdd.unpersist(blocking = false)
-    edges.unpersist(blocking = false)
-    labelsRep
-  }
-
   val dedupGroupsSql: String =
     raw"""WITH RECURSIVE $minhashPairsCtes,
          |cand AS (SELECT doc1, doc2 FROM pairs WHERE est_jaccard >= 0.5),
@@ -908,7 +810,7 @@ object Pipeline {
     * is_canonical` is the cleaned corpus.
     *
     * Scale: inherits dedup_groups' topology (banded LSH candidates +
-    * min-label fixpoint over pair participants only); the extension is
+    * [[Learn.componentLabels]] over pair participants only); the extension is
     * one left join of the label table onto the corpus plus one
     * cluster-keyed size count — both key-equi shuffles. */
   def dedupKeepCanonical(s: SparkSession, d: String): DataFrame = {
@@ -1052,21 +954,6 @@ object Pipeline {
          |WHERE hamming <= 3 ORDER BY doc1, doc2""".stripMargin
 
   // ---------- similarity search ----------
-
-  // Native codegen'd dot/norm (round 14): same sequential fold as the
-  // HOF formulation (acc += a[i]*b[i], one generated loop — zip_with/
-  // aggregate interpret their lambdas), so cosines and oracles are
-  // bit-unchanged. norm2 = sqrt(dot(a, a)) is the exact Σx² fold.
-  // ASSUMES non-null elements and equal lengths (true of this corpus's
-  // fixed-dim embeddings, and what the oracle's list_inner_product
-  // assumes too): the kernel reads a null slot as 0.0 and THROWS on a
-  // length mismatch, where the HOF null-propagated / null-padded.
-  private def dot(a: Column, b: Column): Column =
-    org.apache.spark.sql.graftcol.NativeColumn.column(
-      graft.functions.InnerProduct(
-        org.apache.spark.sql.graftcol.NativeColumn.expression(a),
-        org.apache.spark.sql.graftcol.NativeColumn.expression(b)))
-  private def norm2(a: Column): Column = sqrt(dot(a, a))
 
   /** Brute-force cosine top-k (k=5) for query vectors vec_id < 10 — the
     * exact baseline the LSH variant is checked against. Vectors are cast
@@ -1264,8 +1151,6 @@ object Pipeline {
     // Quantize the trained centroids to 6 decimals so the values survive
     // a text round-trip into the oracle SQL (16 rows × 64 doubles —
     // centroid tables are driver-sized by construction).
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val centRows: Array[(Long, Seq[Double])] =
       cents.map { case (cid, cv) => (cid, cv.map(r6).toSeq) }
     import s.implicits._
@@ -1369,20 +1254,23 @@ object Pipeline {
   }
 
   /** Map-side argmin cluster assignment over a constant-folded centroid
-    * table (expects the vector column named `v`): ties fall to the lowest
-    * cid (FIRST minimum). The k×d centroid table is driver state — the
-    * table you'd broadcast at 100 TB — so assignment never joins the
-    * corpus against k rows. Round 15: rides the native
+    * table (expects the vector column named `v`): struct(cid, dist) of
+    * the FIRST minimum, so ties fall to the lowest cid. The k×d centroid
+    * table is driver state — the table you'd broadcast at 100 TB — so
+    * assignment never joins the corpus against k rows. Rides the native
     * [[graft.functions.NearestCentroid]] kernel (one generated loop per
     * row) instead of the interpreted ~2·d·k HOF closures;
     * [[ivfCidExprHof]] keeps the pure-SQL formulation for the
     * equivalence spec. */
-  private[graft] def ivfCidExpr(cs: Array[(Long, Array[Double])]): Column =
+  private[graft] def nearestCentroid(cs: Array[(Long, Array[Double])]): Column =
     org.apache.spark.sql.graftcol.NativeColumn.column(
       graft.functions.NearestCentroid(
         org.apache.spark.sql.graftcol.NativeColumn.expression(col("v")),
         cs.map(_._2)))
-      .getField("cid")
+
+  /** The cluster id of [[nearestCentroid]]. */
+  private[graft] def ivfCidExpr(cs: Array[(Long, Array[Double])]): Column =
+    nearestCentroid(cs).getField("cid")
 
   /** The pre-round-15 HOF formulation of [[ivfCidExpr]] — executable
     * documentation of what the kernel computes, asserted equivalent in
@@ -1412,30 +1300,31 @@ object Pipeline {
       .collect()
       .map(r => (r.getAs[Long]("cid"), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
-    for (_ <- 1 to iters) {
-      // One keyed reduce per iteration: VectorSum accumulates the d-length
-      // partial vectors map-side (one hash probe per row instead of the
-      // previous posexplode's d probes); the driver-side sv/n divide is
-      // the same single IEEE division avg performed, so the trained
-      // centroids are bit-identical to the posexplode/avg plan's.
-      val upd = vecs.withColumn("cid", ivfCidExpr(cents))
-        .groupBy("cid")
-        .agg(graft.functions.VectorSum.vector_sum(col("v")).as("sv"),
-          count(lit(1)).as("n"))
-        .collect()
-      val next = upd.map { r =>
+    for (_ <- 1 to iters) cents = lloydUpdate(vecs, cents)
+    cents
+  }
+
+  /** One Lloyd update over a (v) frame: [[ivfCidExpr]] assignment, then
+    * ONE keyed reduce collected as k×d driver state. VectorSum
+    * accumulates the d-length partial vectors map-side (one hash probe
+    * per row); the driver-side sv/n divide is avg's own single IEEE
+    * division. The result is relabeled to consecutive cids 1..k':
+    * assignment is by array POSITION, so stored cids must equal
+    * positions — a Lloyd step that empties a cluster would otherwise
+    * desync positional assignment from the stored keys the probe join
+    * and the oracles use. */
+  private[graft] def lloydUpdate(vecs: DataFrame,
+      cents: Array[(Long, Array[Double])]): Array[(Long, Array[Double])] =
+    vecs.withColumn("cid", ivfCidExpr(cents))
+      .groupBy("cid")
+      .agg(graft.functions.VectorSum.vector_sum(col("v")).as("sv"),
+        count(lit(1)).as("n"))
+      .collect()
+      .map { r =>
         val n = r.getAs[Long]("n")
         (r.getAs[Long]("cid"), r.getSeq[Double](1).map(_ / n).toArray)
       }.sortBy(_._1)
-      // Relabel to consecutive 1..k' after every update: ivfCidExpr
-      // assigns by array POSITION, so stored cids must equal positions.
-      // If a Lloyd iteration empties a cluster the raw cid set goes
-      // non-consecutive and positional assignment would desync from the
-      // stored keys the probe join and the oracle use.
-      cents = next.zipWithIndex.map { case ((_, cv), i) => ((i + 1).toLong, cv) }
-    }
-    cents
-  }
+      .zipWithIndex.map { case ((_, cv), i) => ((i + 1).toLong, cv) }
 
   /** Embedding dimensionality of the corpus (TESTDATA.md). */
   val IvfDim = 64
@@ -1877,14 +1766,14 @@ object Pipeline {
     * one unpartitioned window (a single-partition scale-killer) but a
     * TWO-LEVEL prefix sum: an in-block cumulative sum (window partitioned
     * by a block key, fully parallel), and block offsets that are
-    * themselves prefix-summed distributively — the block table is range-
-    * shuffled on `blk`, cumulative-summed per partition, and stitched
-    * with a partition-count-sized offset census (the same topology as
-    * [[Learn.mixImportanceResample]] / [[Q.distPos]]). No window in the
-    * plan ever sees more than one partition's rows except the census,
-    * which is bounded by `spark.sql.shuffle.partitions`, not by corpus
-    * size — so the construction holds at billions of documents. The
-    * DuckDB oracle computes the same values with its single-node SQL. */
+    * themselves prefix-summed distributively by [[Q.distPrefixSum]] over
+    * the block table (range shuffle on `blk`, a per-partition weight
+    * census collected to the driver — bounded by
+    * `spark.sql.shuffle.partitions`, not by corpus size — and one pass
+    * emitting offset + running sum). No window in the plan ever sees
+    * more than one block's rows, so the construction holds at billions
+    * of documents. The DuckDB oracle computes the same values with its
+    * single-node SQL. */
   val PackBudget = 2048L
   val PackBlock = 100L
   def packSequences(s: SparkSession, d: String): DataFrame = {
@@ -1895,12 +1784,8 @@ object Pipeline {
     val inBlock = Window.partitionBy(col("blk")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = toks.withColumn("cum_in_blk", sum(col("est_tokens")).over(inBlock))
-    // Round 20: block offsets = exclusive prefix sum of block totals in
-    // blk order — [[Q.distPrefixSum]] (inclusive, minus the block's own
-    // sum) replaces the census exchange + offset window + in-partition
-    // window, the last of which re-shuffled the block table by __bp
-    // (the checkpoint scan reports UnknownPartitioning, so the
-    // "parallel" window paid a full hidden Exchange).
+    // block offsets = exclusive prefix sum of block totals in blk order
+    // (the inclusive distPrefixSum minus the block's own sum)
     val blockOff = Q.distPrefixSum(
         toks.groupBy(col("blk")).agg(sum(col("est_tokens")).as("blk_sum")),
         "blk_sum", "blk_cum", col("blk"))
@@ -2583,8 +2468,7 @@ object Pipeline {
     * The standard step that turns a scored corpus into balanced training
     * shards.
     *
-    * Scale: the global rank is [[Q.distPos]] — range shuffle + parallel
-    * per-partition ranks + broadcast offsets, never a single-partition
+    * Scale: the global rank is [[Q.distPos]], never a single-partition
     * window; the snake map is pure per-row arithmetic on the position. */
   val Shards = 8
   def shardPack(s: SparkSession, d: String): DataFrame = {
@@ -2956,21 +2840,10 @@ object Pipeline {
 
   /** Deterministic epoch shuffle: the corpus in a reproducible pseudo-
     * random order (seeded md5 lane of the doc id), with the global
-    * position assigned DISTRIBUTED — a range shuffle on the key, a
-    * per-partition rank (window partitioned by the physical partition id,
-    * so it parallelizes), and partition-size offsets cumsum'd over a
-    * partition-count-sized frame joined back by broadcast. No global
-    * single-partition window, no driver zipWithIndex: the classic
-    * distributed position-assignment topology, correct for any partition
-    * boundaries because ranges are non-overlapping and the offset is
-    * computed from actual partition contents. */
+    * position assigned DISTRIBUTED by [[Q.distPos]] — no global
+    * single-partition window, no driver zipWithIndex. */
   def shuffleEpoch(s: SparkSession, d: String): DataFrame = {
     val seed = 42
-    // Round 20: the position assignment IS [[Q.distPos]] — the inline
-    // census+rank-window copy paid two hidden exchanges (census groupBy
-    // and the Window.partitionBy(pid) rank over the checkpoint, whose
-    // scan reports UnknownPartitioning); distPos emits
-    // offset(partition)+local index in one no-shuffle mapPartitions pass.
     Q.distPos(
         t(s, d, "documents")
           .select(col("doc_id"),

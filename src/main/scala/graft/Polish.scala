@@ -334,7 +334,7 @@ object Polish {
     val stopList = RakeStops.map(w => s"'$w'").mkString(", ")
     val occ = t(s, d, "documents")
       .select(col("doc_id"),
-        posexplode(expr("split(trim(text), '\\\\s+')")).as(Seq("pos", "w")))
+        posexplode(expr(wordsExpr)).as(Seq("pos", "w")))
       .withColumn("stop", expr(s"w IN ($stopList)"))
       .withColumn("pid",
         sum(when(col("stop"), 1L).otherwise(0L)).over(
@@ -657,7 +657,7 @@ object Polish {
     * construction as Pipeline.graphTriangles. Vocabulary-bounded. */
   private def undirectedEdges(s: SparkSession, d: String): DataFrame =
     Q.bigramEdges(t(s, d, "documents")
-        .select(expr("split(trim(text), '\\\\s+')").as("ws"))
+        .select(expr(wordsExpr).as("ws"))
         // single-word docs have no edges; without the guard the kernel
         // replays the HOF's descending sequence(1, 0) null src/dst rows
         .filter(size(col("ws")) >= 2))
@@ -817,20 +817,11 @@ object Polish {
     val cent = centSt.getSeq[java.math.BigDecimal](0)
       .zip(centSt.getSeq[Long](1))
       .map { case (sx, nd) => sx.doubleValue / nd }.toArray
-    def d12(x: Double): BigDecimal =
-      BigDecimal(x).setScale(12, BigDecimal.RoundingMode.HALF_UP)
     val cnorm = math.sqrt(cent.map(x => d12(x * x)).sum.toDouble)
     val cLit = cent.map(x => s"${x}D").mkString("array(", ",", ")")
-    // dot/norm through the native InnerProduct kernel — the identical
-    // sequential left folds (Σ x·c and Σ x², one generated loop per row)
-    def ip(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      org.apache.spark.sql.graftcol.NativeColumn.column(
-        graft.functions.InnerProduct(
-          org.apache.spark.sql.graftcol.NativeColumn.expression(a),
-          org.apache.spark.sql.graftcol.NativeColumn.expression(b)))
     vecs
-      .withColumn("dot", ip(col("v"), expr(cLit)))
-      .withColumn("nrm", sqrt(ip(col("v"), col("v"))))
+      .withColumn("dot", dot(col("v"), expr(cLit)))
+      .withColumn("nrm", norm2(col("v")))
       .withColumn("cos", try_divide(col("dot"), col("nrm") * lit(cnorm)))
       .filter(col("cos").isNotNull)
       .agg(count(lit(1)).as("n_vecs"),

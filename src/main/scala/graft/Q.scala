@@ -139,6 +139,44 @@ object Q {
   def davg(c: Column): Column =
     sum(ddec(c)).cast(DoubleType) / count(c)
 
+  /** Whitespace tokens of a `text` column (SQL expression string). */
+  private[graft] val wordsExpr = "split(trim(text), '\\\\s+')"
+
+  /** 60-bit hash lane from the first 15 hex chars of md5 — deliberately
+    * expressible in BOTH engines (Spark `conv(substr(md5,…),16,10)`,
+    * DuckDB `('0x' || substr(md5,…))::BIGINT`) so hash-driven operators
+    * get full DuckDB oracles. [[md5LaneDuck]] is the oracle side. */
+  private[graft] def md5Lane(sparkExpr: String): String =
+    s"cast(conv(substring(md5($sparkExpr), 1, 15), 16, 10) as bigint)"
+  private[graft] def md5LaneDuck(duckExpr: String): String =
+    s"(('0x' || substr(md5($duckExpr), 1, 15))::BIGINT)"
+
+  /** Dot product through the codegen'd [[graft.functions.InnerProduct]]
+    * kernel: the sequential fold `acc += a[i]*b[i]` of the HOF
+    * `aggregate(zip_with(a, b, x*y), 0.0, acc+v)` in one generated loop,
+    * so results and oracles are bit-identical to the HOF. norm2 =
+    * sqrt(dot(a, a)) is the exact Σx² fold. ASSUMES non-null elements and
+    * equal lengths (true of the corpus's fixed-dim embeddings, and what
+    * the oracle's list_inner_product assumes too): the kernel reads a null
+    * slot as 0.0 and THROWS on a length mismatch, where the HOF
+    * null-propagated / null-padded. */
+  private[graft] def dot(a: Column, b: Column): Column =
+    org.apache.spark.sql.graftcol.NativeColumn.column(
+      graft.functions.InnerProduct(
+        org.apache.spark.sql.graftcol.NativeColumn.expression(a),
+        org.apache.spark.sql.graftcol.NativeColumn.expression(b)))
+  private[graft] def norm2(a: Column): Column = sqrt(dot(a, a))
+
+  /** Round half-up to 6 decimals — the precision at which driver-side
+    * doubles survive a text round-trip into oracle SQL literals. */
+  private[graft] def r6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** Exact decimal of a double at scale 12, half-up — the per-term cast
+    * under driver-side exact sums (`Σ d12(x·y)`). */
+  private[graft] def d12(x: Double): BigDecimal =
+    BigDecimal(x).setScale(12, BigDecimal.RoundingMode.HALF_UP)
+
   /** Skew-safe equi-join: the big (skewed) side spreads each key over
     * `salts` deterministic sub-keys derived from full row content; the
     * small side replicates ×salts. Standard hot-key mitigation when AQE
@@ -153,21 +191,6 @@ object Q {
       explode(sequence(lit(0), lit(salts - 1))))
     l.join(r, Seq(key, "__salt")).drop("__salt")
   }
-
-  /** Per-partition row counts by partition index — ONE no-shuffle job
-    * over the internal-row iterators. Replaces the
-    * `groupBy(spark_partition_id())` census, which paid a hash Exchange
-    * of the whole frame just to count partition sizes (round 20; r19's
-    * stage timelines show that exchange on every census). The input
-    * must be pinned (localCheckpoint) when the caller reads it again:
-    * range shuffles re-sample boundaries on re-evaluation. */
-  private[graft] def partitionSizes(df: DataFrame): Array[Long] =
-    org.apache.spark.sql.graftcol.NativeFrame.toInternalRdd(df)
-      .mapPartitionsWithIndex { (i, it) =>
-        var n = 0L
-        while (it.hasNext) { it.next(); n += 1 }
-        Iterator((i, n))
-      }.collect().sortBy(_._1).map(_._2)
 
   /** Range-partition width for the exact-rank topology: follows the
     * session's shuffle parallelism so the same code is the plan at any
@@ -226,13 +249,10 @@ object Q {
     val oNames = parsed.indices.map(i => s"__o$i")
     val sortCols = parsed.zip(oNames).map { case ((_, asc), n) =>
       if (asc) col(n).asc else col(n).desc }
-    val keyed = df
-      .select(parsed.zip(oNames).map { case ((c, _), n) => c.as(n) }: _*)
-      .repartitionByRange(rangeParts(df), sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      // consumed twice (size census + boundary extraction): pin it
-      .localCheckpoint()
-    val sizes = partitionSizes(keyed)
+    val keyed = rangeSorted(
+      df.select(parsed.zip(oNames).map { case ((c, _), n) => c.as(n) }: _*),
+      sortCols)
+    val sizes = census(keyed, RowCount)
     val offsets = sizes.scanLeft(0L)(_ + _)
     val n = sizes.sum
     val q = n / buckets
@@ -247,9 +267,7 @@ object Q {
     }.filter(p => p >= 0 && p < n)
     // pick the boundary rows straight off the checkpoint's sorted
     // iterators — (partition, local index) is known from the census, so
-    // this is one no-shuffle job emitting buckets-1 rows (the previous
-    // formulation ranked the frame through a Window.partitionBy(__pid),
-    // which paid a full extra Exchange — see [[distPos]])
+    // this is one no-shuffle job emitting buckets-1 rows
     val bRows: Seq[org.apache.spark.sql.Row] = if (boundPos.isEmpty) Seq.empty
     else {
       val byPid: Map[Int, Seq[(Long, Long)]] = boundPos.map { p =>
@@ -305,99 +323,87 @@ object Q {
 
   /** Distributed exact global position: SQL-identical to
     * `row_number() OVER (ORDER BY order...) - 1` with no single-partition
-    * sort. Topology (round 20): range shuffle on the order key →
-    * localCheckpoint pin → single-job partition-size census
-    * ([[partitionSizes]]) → ONE mapPartitions pass appending
-    * `offset(partition) + local index` straight off the checkpoint's
-    * sorted iterators. The previous formulation ranked via
-    * `Window.partitionBy(spark_partition_id())` + a broadcast offset
-    * join — which LOOKED parallel but paid a full extra Exchange (the
-    * checkpoint scan reports UnknownPartitioning, so the window
-    * re-shuffled the whole frame by `__pid`) plus a census exchange; the
-    * r19/r20 stage timelines show both. The order must be a total order. */
-  def distPos(df: DataFrame, out: String, order: Column*): DataFrame = {
+    * sort — [[rankCore]] with every row weighing 1. The order must be a
+    * total order. */
+  def distPos(df: DataFrame, out: String, order: Column*): DataFrame =
+    rankCore(df, None, -1L, out, order)._1
+
+  /** Distributed exact INCLUSIVE prefix sum of a LONG weight column over
+    * a total order — `sum(w) OVER (ORDER BY order ROWS UNBOUNDED
+    * PRECEDING)` with no single-partition window ([[rankCore]]). A null
+    * weight contributes 0, so rows ordered before the first non-null
+    * weight read 0 — unlike the window sum, which is NULL there. The
+    * output column is never null. Also returns the grand total (= the
+    * last offset). The order must be a total order. */
+  private[graft] def distPrefixSumWithTotal(df: DataFrame, weight: String,
+      out: String, order: Column*): (DataFrame, Long) =
+    rankCore(df, Some(weight), 0L, out, order)
+
+  /** [[distPrefixSumWithTotal]] without the total. */
+  def distPrefixSum(df: DataFrame, weight: String, out: String,
+      order: Column*): DataFrame =
+    distPrefixSumWithTotal(df, weight, out, order: _*)._1
+
+  /** Range shuffle on `order` + per-partition sort, pinned: every caller
+    * reads the result twice (census + a second pass), and a range
+    * shuffle re-samples its boundaries on re-evaluation. */
+  private def rangeSorted(df: DataFrame, order: Seq[Column]): DataFrame =
+    df.repartitionByRange(rangeParts(df), order: _*)
+      .sortWithinPartitions(order: _*)
+      .localCheckpoint()
+
+  /** Weight ordinal that makes every row weigh 1 (a row count). */
+  private val RowCount = -1
+
+  private def weightOf(r: org.apache.spark.sql.catalyst.InternalRow,
+      wOrd: Int): Long =
+    if (wOrd == RowCount) 1L else if (r.isNullAt(wOrd)) 0L else r.getLong(wOrd)
+
+  /** Per-partition weight totals by partition index — ONE no-shuffle job
+    * over the internal-row iterators of a [[rangeSorted]] frame. */
+  private def census(keyed: DataFrame, wOrd: Int): Array[Long] =
+    org.apache.spark.sql.graftcol.NativeFrame.toInternalRdd(keyed)
+      .mapPartitionsWithIndex { (i, it) =>
+        var s = 0L
+        while (it.hasNext) s += weightOf(it.next(), wOrd)
+        Iterator((i, s))
+      }.collect().sortBy(_._1).map(_._2)
+
+  /** The exact-rank core behind [[distPos]] and [[distPrefixSumWithTotal]]:
+    * [[rangeSorted]] → per-partition weight [[census]] → ONE
+    * mapPartitions pass appending `bias + offset(partition) + running
+    * weight` straight off the pinned sorted iterators. `weight` names a
+    * LONG column; `None` weighs every row 1. Returns the frame and the
+    * grand total weight. */
+  private def rankCore(df: DataFrame, weight: Option[String], bias: Long,
+      out: String, order: Seq[Column]): (DataFrame, Long) = {
     import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
     import org.apache.spark.sql.graftcol.NativeFrame
-    val spark = df.sparkSession
-    val keyed = df
-      .repartitionByRange(rangeParts(df), order: _*)
-      .sortWithinPartitions(order: _*)
-      // consumed twice (size census + position pass): pin partition
-      // contents — range shuffles re-sample boundaries on re-evaluation
-      .localCheckpoint()
-    val offsets = partitionSizes(keyed).scanLeft(0L)(_ + _)
+    val wOrd = weight.fold(RowCount) { w =>
+      val i = df.schema.fieldIndex(w)
+      require(df.schema(i).dataType == LongType,
+        s"distPrefixSum needs a LONG weight, got ${df.schema(i).dataType}")
+      i
+    }
+    val keyed = rangeSorted(df, order)
+    val offsets = census(keyed, wOrd).scanLeft(0L)(_ + _)
     val schema = StructType(keyed.schema.fields :+
       StructField(out, LongType, nullable = false))
     val rdd = NativeFrame.toInternalRdd(keyed).mapPartitionsWithIndex {
       (i, it) =>
-        var pos = offsets(i) - 1
+        var run = bias + offsets(i)
         val tail = new GenericInternalRow(1)
         val joined = new JoinedRow
         // rows may be reused by the scan; the joined view is consumed
         // row-at-a-time downstream (any buffering operator copies), the
         // same contract every InternalRow scan has
         it.map { r =>
-          pos += 1; tail.update(0, pos)
+          run += weightOf(r, wOrd); tail.update(0, run)
           joined(r, tail): org.apache.spark.sql.catalyst.InternalRow
         }
     }
-    NativeFrame.internalCreate(spark, rdd, schema)
+    (NativeFrame.internalCreate(df.sparkSession, rdd, schema), offsets.last)
   }
-
-  /** Distributed exact INCLUSIVE prefix sum of a LONG weight column over
-    * a total order — `sum(w) OVER (ORDER BY order ROWS UNBOUNDED
-    * PRECEDING)` with no single-partition window and (round 20) no
-    * hidden re-shuffle: range shuffle on the order key → localCheckpoint
-    * pin → one no-shuffle job summing each partition's weights → one
-    * mapPartitions pass emitting `offset(partition) + running sum`
-    * straight off the pinned sorted iterators (the same machinery as
-    * [[distPos]]). A null weight contributes 0, so rows ordered before
-    * the first non-null weight read 0 — unlike the window sum, which is
-    * NULL there. The output column is never null. Also returns the grand
-    * total (= the last offset), which callers previously recomputed with
-    * a separate aggregate over the pin. The order must be a total order. */
-  private[graft] def distPrefixSumWithTotal(df: DataFrame, weight: String,
-      out: String, order: Column*): (DataFrame, Long) = {
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
-    import org.apache.spark.sql.graftcol.NativeFrame
-    val spark = df.sparkSession
-    val keyed = df
-      .repartitionByRange(rangeParts(df), order: _*)
-      .sortWithinPartitions(order: _*)
-      // consumed twice (weight census + prefix pass): pin the shuffle
-      .localCheckpoint()
-    val wOrd = keyed.schema.fieldIndex(weight)
-    require(keyed.schema(wOrd).dataType == LongType,
-      s"distPrefixSum needs a LONG weight, got ${keyed.schema(wOrd).dataType}")
-    val psums = NativeFrame.toInternalRdd(keyed).mapPartitionsWithIndex {
-      (i, it) =>
-        var s = 0L
-        while (it.hasNext) {
-          val r = it.next(); if (!r.isNullAt(wOrd)) s += r.getLong(wOrd)
-        }
-        Iterator((i, s))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = psums.scanLeft(0L)(_ + _)
-    val schema = StructType(keyed.schema.fields :+
-      StructField(out, LongType, nullable = false))
-    val rdd = NativeFrame.toInternalRdd(keyed).mapPartitionsWithIndex {
-      (i, it) =>
-        var run = offsets(i)
-        val tail = new GenericInternalRow(1)
-        val joined = new JoinedRow
-        it.map { r =>
-          if (!r.isNullAt(wOrd)) run += r.getLong(wOrd)
-          tail.update(0, run)
-          joined(r, tail): org.apache.spark.sql.catalyst.InternalRow
-        }
-    }
-    (NativeFrame.internalCreate(spark, rdd, schema), offsets.last)
-  }
-
-  /** [[distPrefixSumWithTotal]] without the total. */
-  def distPrefixSum(df: DataFrame, weight: String, out: String,
-      order: Column*): DataFrame =
-    distPrefixSumWithTotal(df, weight, out, order: _*)._1
 
   // --- DuckDB oracle SQL fragments mirroring the helpers above ---
   def DSUM(e: String): String =

@@ -332,8 +332,6 @@ object Quality {
 
   // ---------- Jensen–Shannon divergence ----------
 
-  private val qWordsExpr = "split(trim(text), '\\\\s+')"
-
   /** Jensen–Shannon divergence (nats) between every source pair's word
     * distributions: JSD = ½·KL(p‖m) + ½·KL(q‖m) with m = (p+q)/2 — the
     * symmetric, bounded ([0, ln 2]) vocabulary-drift measure; zero-count
@@ -345,7 +343,7 @@ object Quality {
     * decimal-quantized before the exact sum. */
   def statJsDivergence(s: SparkSession, d: String): DataFrame = {
     val cnt = t(s, d, "documents")
-      .select(col("source"), explode(expr(qWordsExpr)).as("w"))
+      .select(col("source"), explode(expr(wordsExpr)).as("w"))
       .groupBy("source", "w").agg(count(lit(1)).as("c"))
       .localCheckpoint()
     val srcN = cnt.groupBy("source").agg(sum("c").as("n"))

@@ -47,22 +47,6 @@ import Q._
   */
 object Refine {
 
-  // Native codegen'd dot/norm (round 14): the HOF fold
-  // aggregate(zip_with(a, b, x*y), 0.0, acc+v) interprets ~2·d closures
-  // per pair; InnerProduct runs the identical sequential accumulation in
-  // one generated loop (acc += a[i]*b[i]), so every cosine and the DuckDB
-  // oracles are bit-unchanged. norm2 = sqrt(dot(a, a)) reproduces the
-  // Σx² fold exactly. ASSUMES non-null elements and equal lengths (true
-  // of this corpus's fixed-dim embeddings): the kernel reads a null slot
-  // as 0.0 and THROWS on a length mismatch, where the HOF
-  // null-propagated / null-padded.
-  private def dot(a: Column, b: Column): Column =
-    org.apache.spark.sql.graftcol.NativeColumn.column(
-      graft.functions.InnerProduct(
-        org.apache.spark.sql.graftcol.NativeColumn.expression(a),
-        org.apache.spark.sql.graftcol.NativeColumn.expression(b)))
-  private def norm2(a: Column): Column = sqrt(dot(a, a))
-
   // ---------- semantic deduplication (SemDeDup) ----------
 
   private val SemK = 16
@@ -244,7 +228,7 @@ object Refine {
       explode(expr("filter(split(lower(trim(text)), '\\\\s+'), x -> x != '')"))
         .as("tok"))
     val b = expr(
-      s"cast(conv(substring(md5(tok), 1, 15), 16, 10) as bigint) % $HashDim")
+      s"${md5Lane("tok")} % $HashDim")
     val scored = toks.withColumn("w",
       ((b * lit(2654435761L)) % lit(2001L) - lit(1000L)).cast("double") / 1000.0)
     scored.groupBy("doc_id")
@@ -296,7 +280,7 @@ object Refine {
         org.apache.spark.sql.graftcol.NativeColumn.column(
           graft.functions.TrigramXxhashChain(
             org.apache.spark.sql.graftcol.NativeColumn.expression(
-              expr("split(trim(text), '\\\\s+')"))))).as("g"))
+              expr(wordsExpr))))).as("g"))
       .distinct()
       .localCheckpoint() // read for totals and the per-gram source sets
     val tot = grams.groupBy("source").agg(count(lit(1)).as("n"))
@@ -432,8 +416,6 @@ object Refine {
       }
       w
     }
-    def d12(x: Double): BigDecimal =
-      BigDecimal(x).setScale(12, BigDecimal.RoundingMode.HALF_UP)
     def normOf(w: Array[Double]): Double =
       math.sqrt(w.map(x => d12(x * x)).sum.toDouble)
     // component 1: plain power iteration
@@ -452,8 +434,6 @@ object Refine {
       o2 = Array.tabulate(dim)(i => w(i) - p * v1(i))
       n2 = normOf(o2); u = o2.map(_ / n2)
     }
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     import s.implicits._
     val out =
       (0 until dim).map(i => (1, (i + 1).toLong, r6(w1(i) / n1), r6(n1))) ++
@@ -583,7 +563,7 @@ object Refine {
     val a0 = 100.0
     val sw = t(s, d, "documents")
       .select(col("source"), explode(expr(
-        s"filter(split(trim(text), '\\\\s+'), x -> x != '')")).as("w"))
+        s"filter($wordsExpr, x -> x != '')")).as("w"))
       .groupBy("source", "w").agg(count(lit(1)).as("ysw"))
       .localCheckpoint() // read thrice: per-source, per-term, global totals
     val ns = sw.groupBy("source").agg(sum("ysw").as("ns"))
@@ -653,7 +633,7 @@ object Refine {
   private def lpaCommunities(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     val pairs = Q.bigramEdges(t(s, d, "documents")
-      .select(expr("split(trim(text), '\\\\s+')").as("ws"))
+      .select(expr(wordsExpr).as("ws"))
       // single-word docs have no edges; without the guard the kernel
       // replays the HOF's descending sequence(1, 0) null src/dst rows
       .filter(size(col("ws")) >= 2))
@@ -914,8 +894,7 @@ object Refine {
     * One map-side keyed reduce; everything after is bounded-table math. */
   def privacyDpCounts(s: SparkSession, d: String): DataFrame = {
     val u = expr(
-      "(cast(conv(substring(md5(concat(lang, '|', source)), 1, 15), 16, 10) " +
-        "as bigint) % 1000000 + 1) / 1000001.0")
+      s"(${md5Lane("concat(lang, '|', source)")} % 1000000 + 1) / 1000001.0")
     t(s, d, "documents").groupBy("lang", "source")
       .agg(count(lit(1)).as("n"))
       .withColumn("u", u)
@@ -977,7 +956,7 @@ object Refine {
     val dec = DecimalType(38, 12)
     val tc = t(s, d, "documents")
       .select(col("doc_id"), explode(expr(
-        "filter(split(trim(text), '\\\\s+'), x -> x != '')")).as("w"))
+        s"filter($wordsExpr, x -> x != '')")).as("w"))
       .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
     val st = tc.groupBy("w")
       .agg(count(lit(1)).as("nd"), sum("c").as("total"),
@@ -1314,7 +1293,7 @@ object Refine {
     * lexicographic tie-break. */
   def graphJaccardNeighbors(s: SparkSession, d: String): DataFrame = {
     val pairs = Q.bigramEdges(t(s, d, "documents")
-        .select(expr("split(trim(text), '\\\\s+')").as("ws"))
+        .select(expr(wordsExpr).as("ws"))
         // same single-word guard as graphLabelProp: no words, no edges
         .filter(size(col("ws")) >= 2))
       .select(col("src"), col("dst"))
@@ -1431,8 +1410,7 @@ object Refine {
     * decides whether per-user sharding needs salting and whether a
     * "remove the whales" ablation is worth running. Per-user totals are
     * one keyed reduce to exact BIGINT cents; ranking rides
-    * [[Q.distPos]] (range shuffle → parallel per-partition rank →
-    * broadcast offsets — no single-partition sort); the four shares are
+    * [[Q.distPos]] (no single-partition sort); the four shares are
     * bounded-table math. */
   def eventConcentration(s: SparkSession, d: String): DataFrame = {
     val users = t(s, d, "events").groupBy("user_id")

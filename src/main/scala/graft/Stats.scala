@@ -25,13 +25,6 @@ import Q._
   */
 object Stats {
 
-  /** 60-bit hash lane from the md5 hex prefix — identical value in Spark
-    * and DuckDB (see Pipeline's MinHash lanes). */
-  private def lane(sparkExpr: String): String =
-    s"cast(conv(substring(md5($sparkExpr), 1, 15), 16, 10) as bigint)"
-  private def laneDuck(duckExpr: String): String =
-    s"(('0x' || substr(md5($duckExpr), 1, 15))::BIGINT)"
-
   private val CmsDepth = 4
   private val CmsWidth = 256L
   private val BloomBits = 8192L
@@ -68,7 +61,7 @@ object Stats {
     val ev = t(s, d, "events")
     val seeds = explode(sequence(lit(0), lit(CmsDepth - 1))).as("seed")
     val bucket = expr(
-      s"pmod(${lane(s"concat(cast(user_id as string), '#cms', cast(seed as string))")}, $CmsWidth)")
+      s"pmod(${md5Lane(s"concat(cast(user_id as string), '#cms', cast(seed as string))")}, $CmsWidth)")
     val cells = ev.select(col("user_id"), seeds)
       .groupBy(col("seed"), bucket.as("bucket"))
       .agg(count(lit(1)).as("cnt"))
@@ -85,7 +78,7 @@ object Stats {
   val sketchCmsSql: String =
     s"""WITH cells AS (
        |  SELECT l.seed,
-       |    ${laneDuck(s"CAST(user_id AS VARCHAR) || '#cms' || CAST(l.seed AS VARCHAR)")} % $CmsWidth AS bucket,
+       |    ${md5LaneDuck(s"CAST(user_id AS VARCHAR) || '#cms' || CAST(l.seed AS VARCHAR)")} % $CmsWidth AS bucket,
        |    CAST(count(*) AS BIGINT) AS cnt
        |  FROM events, (SELECT unnest(range($CmsDepth)) AS seed) l
        |  GROUP BY 1, 2),
@@ -94,7 +87,7 @@ object Stats {
        |SELECT e.user_id, e.exact_cnt, min(c.cnt) AS est_cnt
        |FROM exact e, (SELECT unnest(range($CmsDepth)) AS seed) l
        |JOIN cells c ON c.seed = l.seed
-       | AND c.bucket = ${laneDuck(s"CAST(e.user_id AS VARCHAR) || '#cms' || CAST(l.seed AS VARCHAR)")} % $CmsWidth
+       | AND c.bucket = ${md5LaneDuck(s"CAST(e.user_id AS VARCHAR) || '#cms' || CAST(l.seed AS VARCHAR)")} % $CmsWidth
        |GROUP BY e.user_id, e.exact_cnt
        |ORDER BY e.user_id""".stripMargin
 
@@ -114,7 +107,7 @@ object Stats {
   def sketchBloom(s: SparkSession, d: String): DataFrame = {
     val seeds = explode(sequence(lit(0), lit(BloomK - 1))).as("seed")
     def pos(key: String) = expr(
-      s"pmod(${lane(s"concat('bl#', cast(seed as string), '#', cast($key as string))")}, $BloomBits)")
+      s"pmod(${md5Lane(s"concat('bl#', cast(seed as string), '#', cast($key as string))")}, $BloomBits)")
     val bits = t(s, d, "orders").select(col("o_custkey"), seeds)
       .select(pos("o_custkey").as("pos")).distinct()
     val truth = t(s, d, "orders").select(col("o_custkey")).distinct()
@@ -131,11 +124,11 @@ object Stats {
   }
   val sketchBloomSql: String =
     s"""WITH bits AS (
-       |  SELECT DISTINCT ${laneDuck(s"'bl#' || CAST(l.seed AS VARCHAR) || '#' || CAST(o_custkey AS VARCHAR)")} % $BloomBits AS pos
+       |  SELECT DISTINCT ${md5LaneDuck(s"'bl#' || CAST(l.seed AS VARCHAR) || '#' || CAST(o_custkey AS VARCHAR)")} % $BloomBits AS pos
        |  FROM orders, (SELECT unnest(range($BloomK)) AS seed) l),
        |probe_pos AS (
        |  SELECT c.c_custkey,
-       |    ${laneDuck(s"'bl#' || CAST(l.seed AS VARCHAR) || '#' || CAST(c.c_custkey AS VARCHAR)")} % $BloomBits AS pos
+       |    ${md5LaneDuck(s"'bl#' || CAST(l.seed AS VARCHAR) || '#' || CAST(c.c_custkey AS VARCHAR)")} % $BloomBits AS pos
        |  FROM customer c, (SELECT unnest(range($BloomK)) AS seed) l),
        |probe AS (
        |  SELECT p.c_custkey,
@@ -169,7 +162,7 @@ object Stats {
   def sketchHll(s: SparkSession, d: String): DataFrame = {
     val ev = t(s, d, "events")
     val h = ev.select(col("event_type"),
-        expr(lane("concat('hll#', cast(user_id as string))")).as("lane"))
+        expr(md5Lane("concat('hll#', cast(user_id as string))")).as("lane"))
       .select(col("event_type"), pmod(col("lane"), lit(HllM)).as("idx"),
         expr(s"lane div $HllM").as("w"))
       .select(col("event_type"), col("idx"),
@@ -198,7 +191,7 @@ object Stats {
   val sketchHllSql: String =
     s"""WITH h AS (
        |  SELECT event_type,
-       |    ${laneDuck("'hll#' || CAST(user_id AS VARCHAR)")} AS lane
+       |    ${md5LaneDuck("'hll#' || CAST(user_id AS VARCHAR)")} AS lane
        |  FROM events),
        |r AS (
        |  SELECT event_type, lane % $HllM AS idx,
@@ -242,14 +235,14 @@ object Stats {
   def sampleWeighted(s: SparkSession, d: String): DataFrame =
     t(s, d, "documents")
       .withColumn("u",
-        expr(s"greatest(${lane("concat('pw#', cast(doc_id as string))")}, 1L) / $LaneRange"))
+        expr(s"greatest(${md5Lane("concat('pw#', cast(doc_id as string))")}, 1L) / $LaneRange"))
       .select(col("doc_id"), col("n_chars"),
         round(col("n_chars").cast("double") / col("u"), 6).cast("double").as("priority"))
       .orderBy(col("priority").desc, col("doc_id"))
       .limit(SampleK)
   val sampleWeightedSql: String =
     s"""SELECT doc_id, n_chars,
-       |  round(n_chars / (greatest(${laneDuck("'pw#' || CAST(doc_id AS VARCHAR)")}, 1) / $LaneRange), 6) AS priority
+       |  round(n_chars / (greatest(${md5LaneDuck("'pw#' || CAST(doc_id AS VARCHAR)")}, 1) / $LaneRange), 6) AS priority
        |FROM documents
        |ORDER BY priority DESC, doc_id LIMIT $SampleK""".stripMargin
 
@@ -269,7 +262,7 @@ object Stats {
       .agg(ceil(min(col("n")).cast("double") / 2.0).cast("long").as("cap")))
     val w = Window.partitionBy("source").orderBy(col("rnd"), col("doc_id"))
     docs
-      .withColumn("rnd", expr(lane("concat('bal#', cast(doc_id as string))")))
+      .withColumn("rnd", expr(md5Lane("concat('bal#', cast(doc_id as string))")))
       .withColumn("rk", row_number().over(w).cast("long"))
       .crossJoin(cap)
       .select(col("doc_id"), col("source"), col("rk"),
@@ -282,7 +275,7 @@ object Stats {
        |  FROM (SELECT source, count(*) AS n FROM documents GROUP BY source)),
        |rk AS (SELECT doc_id, source,
        |    CAST(row_number() OVER (PARTITION BY source
-       |      ORDER BY ${laneDuck("'bal#' || CAST(doc_id AS VARCHAR)")}, doc_id)
+       |      ORDER BY ${md5LaneDuck("'bal#' || CAST(doc_id AS VARCHAR)")}, doc_id)
        |      AS BIGINT) AS rk
        |  FROM documents)
        |SELECT doc_id, source, rk, rk <= cap.cap AS keep
@@ -934,8 +927,7 @@ object Stats {
     * test that survives the heavy-tailed spend distributions Pearson is
     * blind to.
     *
-    * Scale: ranks come from [[Q.distPos]] (range shuffle + parallel
-    * per-partition ranks + broadcast offsets — no single-partition
+    * Scale: ranks come from [[Q.distPos]] (no single-partition
     * window); tie averaging joins each row to its value-group (min+max)
     * positions through keyed aggregations. Doubling the tie-averaged
     * ranks ((lo+hi+2) instead of (lo+hi+2)/2) keeps every rank an exact

@@ -472,22 +472,20 @@ object Tpch {
        |WHERE l_shipdate >= TIMESTAMP '1996-09-01'
        |  AND l_shipdate < TIMESTAMP '1996-10-01'""".stripMargin
 
+  /** TPC-H Q15 in [[q11]]'s shape: ONE fact pass, the max-revenue
+    * threshold taken over the already-reduced per-supplier stream
+    * (~#suppliers rows) with an empty-frame window — built lazily, so no
+    * job runs before the plan is executed. */
   def q15(s: SparkSession, d: String): DataFrame = {
-    // ONE fact pass: the per-supplier revenue aggregate materializes once
-    // (localCheckpoint, ~#suppliers rows) and serves both consumers — the
-    // max-revenue threshold and the supplier join — instead of re-running
-    // the filtered lineitem aggregation for each (the q11 shape).
     val rev = li(s, d).filter(
         col("l_shipdate") >= ts("1996-01-01") &&
           col("l_shipdate") < ts("1996-04-01"))
       .groupBy(col("l_suppkey").as("supplier_no"))
       .agg(dsum(discPrice).as("total_revenue"))
-      .localCheckpoint()
-    val mx = rev.agg(max("total_revenue").as("max_rev"))
-    supp(s, d)
-      .join(rev, col("s_suppkey") === col("supplier_no"))
-      .join(broadcast(mx))
+    val w = org.apache.spark.sql.expressions.Window.partitionBy()
+    rev.withColumn("max_rev", max(col("total_revenue")).over(w))
       .filter(col("total_revenue") === col("max_rev"))
+      .join(supp(s, d), col("s_suppkey") === col("supplier_no"))
       .select("s_suppkey", "s_name", "total_revenue")
       .orderBy(col("s_suppkey"))
   }

@@ -400,24 +400,82 @@ class LearnSpec extends AnyFunSuite {
   }
 }
 
-/** Round-16 adaptive component solve (graphComponents): the driver
-  * union-find fast path must agree with the distributed pointer-jumping
-  * fixpoint it short-circuits. */
-class ComponentPathsSpec extends AnyFunSuite {
+/** The one component solve, [[Learn.componentLabels]]: its driver
+  * union-find branch and its distributed pointer-jumping branch must both
+  * return the true component minima, and both registry operators built on
+  * it must come out the same through either branch. */
+class ComponentLabelsSpec extends AnyFunSuite {
   import SparkSpec._
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.functions._
 
-  test("componentLabelsDistributed == repComponentsDriver on a star graph") {
-    import org.apache.spark.sql.functions.col
-    // star edges member->bucket-min, two chained buckets, isolated pair
-    val pairs: Seq[(Long, Long)] = Seq(
-      (2L, 1L), (3L, 1L), (4L, 3L), (5L, 3L),   // chained stars -> comp 1
-      (7L, 6L), (9L, 8L), (10L, 8L))
+  private def labels(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private def bothBranches(pairs: Seq[(Long, Long)],
+      expect: Map[Long, Long]): Unit = {
     val edges = spark.createDataFrame(pairs).toDF("u", "v")
-    val dist = Learn.componentLabelsDistributed(spark, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val driver = Pipeline.repComponentsDriver(pairs.toArray).toMap
-    assert(dist == driver)
-    assert(dist == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
-      6L -> 6L, 7L -> 6L, 8L -> 8L, 9L -> 8L, 10L -> 8L))
+    assert(edges.count() <= Pipeline.DedupFixpointDriverCap,
+      "the fixture must take the driver branch")
+    val driver = labels(Learn.componentLabels(spark, edges))
+    assert(driver == Pipeline.repComponentsDriver(pairs.toArray).toMap)
+    val dist = labels(Learn.componentLabelsDistributed(spark, edges))
+    assert(driver == dist, s"driver=$driver dist=$dist")
+    assert(driver == expect)
+  }
+
+  test("chains, cliques, duplicate and reversed edges: both branches agree") {
+    // chain 1-2-3-4-5, clique {10,11,12}, pair (20,21) with dup + reversed
+    // edges, self-linked hub (30 bridges two chains)
+    bothBranches(Seq(
+        (1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L), (10L, 12L),
+        (20L, 21L), (21L, 20L), (20L, 21L), (30L, 31L), (32L, 30L),
+        (33L, 32L), (5L, 4L)),
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
+        10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L,
+        30L -> 30L, 31L -> 30L, 32L -> 30L, 33L -> 30L))
+  }
+
+  test("chained stars: both branches agree") {
+    // star edges member->bucket-min, two chained buckets, isolated pair
+    bothBranches(Seq(
+        (2L, 1L), (3L, 1L), (4L, 3L), (5L, 3L),
+        (7L, 6L), (9L, 8L), (10L, 8L)),
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
+        6L -> 6L, 7L -> 6L, 8L -> 8L, 9L -> 8L, 10L -> 8L))
+  }
+
+  test("dedupGroups output at the spec corpus matches the distributed route") {
+    // the shipped operator (driver branch at this corpus size) vs the
+    // same expansion over labels from the distributed fixpoint
+    val shipped = Pipeline.dedupGroups(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val (members, repPairs) = Pipeline.minhashScaffold(spark, sf)
+    val labelsRep = Learn.componentLabelsDistributed(spark,
+        repPairs.select(col("r1").as("u"), col("r2").as("v")))
+      .toDF("rep", "label")
+    val docRep = members.join(
+      members.groupBy("th").agg(min("doc_id").as("rep"),
+        count(lit(1)).as("gsz")), "th")
+    val viaDist = docRep.join(labelsRep, Seq("rep"), "left")
+      .filter(col("label").isNotNull || col("gsz") >= 2)
+      .select(col("doc_id"), coalesce(col("label"), col("rep")).as("keep_id"))
+      .orderBy("doc_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(shipped.nonEmpty)
+    assert(shipped == viaDist)
+  }
+
+  test("graphComponents output at the spec corpus matches the distributed route") {
+    val shipped = Learn.graphComponents(spark, sf).collect().toSeq
+    val viaDist = Learn.componentLabelsDistributed(spark,
+        Learn.graphComponentEdges(spark, sf))
+      .groupBy(col("c").as("comp_id"))
+      .agg(count(lit(1)).as("n_docs"),
+        min("node").as("min_doc"), max("node").as("max_doc"))
+      .orderBy(col("n_docs").desc, col("comp_id"))
+      .collect().toSeq
+    assert(shipped.nonEmpty)
+    assert(shipped == viaDist)
   }
 }

@@ -1845,53 +1845,3 @@ class IngestOpsSpec extends AnyFunSuite {
     assert(math.abs(rows("bigram").getAs[Double]("zipf_slope") - bs) < 1e-4)
   }
 }
-
-/** Round-16 adaptive component solve: the driver union-find fast path of
-  * dedupGroups must agree exactly with the distributed min-label fixpoint
-  * it short-circuits, on graphs with multi-edge chains, cliques, isolated
-  * pairs, and duplicate/symmetric edges. */
-class DedupComponentPathsSpec extends AnyFunSuite {
-  import SparkSpec._
-
-  test("driver union-find == distributed min-label fixpoint") {
-    // chain 1-2-3-4, clique {10,11,12}, pair (20,21), dup + reversed
-    // edges, self-linked hub (30 bridges two chains)
-    val pairs: Seq[(Long, Long)] = Seq(
-      (1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L), (10L, 12L),
-      (20L, 21L), (21L, 20L), (20L, 21L), (30L, 31L), (32L, 30L),
-      (33L, 32L), (5L, 4L))
-    val driver = Pipeline.repComponentsDriver(pairs.toArray).toMap
-    val p = spark.createDataFrame(pairs).toDF("r1", "r2")
-    val dist = Pipeline.repComponentsDistributed(spark, p)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(driver == dist,
-      s"driver=$driver dist=$dist")
-    // and the labels are the true component minima
-    val expect = Map(
-      1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
-      10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L,
-      30L -> 30L, 31L -> 30L, 32L -> 30L, 33L -> 30L)
-    assert(driver == expect)
-  }
-
-  test("dedupGroups output at the spec corpus matches the distributed path") {
-    // force the whole operator through both component routes: the shipped
-    // operator (driver path at this corpus size) vs a reconstruction that
-    // always runs the distributed fixpoint over the same rep pairs
-    val shipped = Pipeline.dedupGroups(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val (members, repPairs) = Pipeline.minhashScaffold(spark, sf)
-    import org.apache.spark.sql.functions._
-    val labelsRep = Pipeline.repComponentsDistributed(
-      spark, repPairs.select(col("r1"), col("r2")))
-    val docRep = members.join(
-      members.groupBy("th").agg(min("doc_id").as("rep"),
-        count(lit(1)).as("gsz")), "th")
-    val viaDist = docRep.join(labelsRep, Seq("rep"), "left")
-      .filter(col("label").isNotNull || col("gsz") >= 2)
-      .select(col("doc_id"), coalesce(col("label"), col("rep")).as("keep_id"))
-      .orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(shipped == viaDist)
-  }
-}

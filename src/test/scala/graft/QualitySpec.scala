@@ -250,6 +250,38 @@ class QualitySpec extends AnyFunSuite {
     assert(total == src.agg(sum("w")).head.getLong(0))
   }
 
+  test("distPos/distPrefixSum/ntileByBoundaries match the window builtins on edge inputs") {
+    // the exact-rank core on an empty frame, a single row, and all-equal
+    // order values broken by a tie-break key
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.DataFrame
+    import spark.implicits._
+    def byKey(df: DataFrame, c: String): Map[Long, Any] =
+      df.collect().map(r => r.getAs[Long]("k") -> r.get(r.fieldIndex(c))).toMap
+    val fixtures = Seq(
+      "empty" -> Seq.empty[(Long, Long, Long)],
+      "single row" -> Seq((7L, 3L, 5L)),
+      "all ties" -> (1L to 9L).map(k => (k, 4L, k * 2)))
+    for ((name, rows) <- fixtures) {
+      val src = rows.toDF("k", "o", "w")
+      val ord = Seq(col("o"), col("k"))
+      val w = Window.orderBy(ord: _*)
+      assert(byKey(Q.distPos(src, "p", ord: _*), "p") ==
+        byKey(src.withColumn("p", row_number().over(w).cast("long") - 1), "p"),
+        s"distPos, $name")
+      val (cum, total) = Q.distPrefixSumWithTotal(src, "w", "c", ord: _*)
+      assert(byKey(cum, "c") == byKey(src.withColumn("c", sum(col("w")).over(
+          w.rowsBetween(Window.unboundedPreceding, Window.currentRow))), "c"),
+        s"distPrefixSum, $name")
+      assert(byKey(Q.distPrefixSum(src, "w", "c", ord: _*), "c") == byKey(cum, "c"))
+      assert(total == rows.map(_._3).sum, s"prefix-sum total, $name")
+      for (b <- Seq(1, 4, 12))
+        assert(byKey(Q.ntileByBoundaries(src, b, "b", ord: _*), "b") ==
+          byKey(src.withColumn("b", ntile(b).over(w).cast("long")), "b"),
+          s"ntileByBoundaries($b), $name")
+    }
+  }
+
   test("rolling corr: contiguous hourly grid, |r|<=1, frame caps at 24") {
     val rows = Stats.eventRollingCorr(spark, sf).collect()
     assert(rows.nonEmpty)

@@ -463,6 +463,36 @@ case class AttrClickState(id: Long, us: Long)
 class PlanAuditSpec extends AnyFunSuite {
   import SparkSpec._
 
+  test("TPC-H queries run no Spark job while they are built") {
+    // the graft.Bench lane: cached tables, each query built once and
+    // timed by draining clones of its plan — a job run at construction
+    // would escape the timer. A separate session keeps the cached views
+    // and `graft.cached.dir` away from every other spec.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.graftspec.ListenerBus
+    val bench = spark.newSession()
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    Q.cacheTables(bench, sf, 4)
+    sc.addSparkListener(listener)
+    try {
+      val eager = Tpch.benchOrder.flatMap { q =>
+        ListenerBus.drain(sc); started.set(0)
+        Tpch.queries(q)(bench, sf)
+        ListenerBus.drain(sc)
+        Some(started.get).filter(_ > 0).map(n => s"$q: $n")
+      }
+      assert(eager.isEmpty, s"jobs at construction: $eager")
+    } finally {
+      sc.removeSparkListener(listener)
+      Q.tableNames.foreach(bench.catalog.uncacheTable)
+    }
+  }
+
   test("no TPC-H query plans a CartesianProduct") {
     val offenders = Tpch.benchOrder.filter { q =>
       Tpch.queries(q)(spark, sf).queryExecution.executedPlan
